@@ -176,7 +176,7 @@ def _q_wcc(spark, sf_dir):
 
 
 def _q_wcc_block(spark, sf_dir):
-    """CSR-block min-combiner engine (csr.py scatter_packed_min) — same
+    """CSR-block min-combiner engine (pregel.run_block_program) — same
     min-label fixpoint as `wcc`, alternative physical plan; shares its
     SQL twin."""
     from graphscope_spark.algorithms import wcc_block
@@ -191,7 +191,7 @@ def _q_cdlp(spark, sf_dir):
 
 
 def _q_cdlp_block(spark, sf_dir):
-    """CSR-block label-histogram engine (csr.py scatter_packed_counts) —
+    """CSR-block label-histogram engine (pregel.run_block_program) —
     same LDBC most-frequent/ties→min rule as `cdlp`, alternative physical
     plan; shares its SQL twin."""
     from graphscope_spark.algorithms import cdlp_block
@@ -242,7 +242,7 @@ def _q_sssp(spark, sf_dir):
 
 
 def _q_sssp_block(spark, sf_dir):
-    """Weighted CSR-block relaxation engine (csr.py scatter_packed_relax)
+    """Weighted CSR-block relaxation engine (pregel.run_block_program)
     — bit-identical fixpoint to `sssp` (same two-operand relax adds,
     order-free float min), alternative physical plan; shares its SQL
     twin."""

@@ -132,168 +132,85 @@ def cdlp_block(
     max_iter: int = 10,
     num_blocks: int | None = None,
 ) -> SuperstepResult:
-    """CDLP over hash-partitioned CSR block DataFrames — identical
-    semantics to :func:`cdlp` (LDBC most-frequent-neighbor-label, ties →
-    min, synchronous fixed rounds), alternative physical plan
-    (graphscope_spark/csr.py; see pagerank_block for the architecture).
+    """CDLP over hash-partitioned CSR blocks — identical semantics to
+    :func:`cdlp` (LDBC most-frequent-neighbor-label, ties → min,
+    synchronous fixed rounds), alternative physical plan on the block
+    skeleton (pregel.run_block_program; see pagerank_block).
 
     The join engine's per-round ``groupBy(id, label).count`` + window
     argmax shuffles Θ(E) message rows then Θ(distinct (id,label)) count
-    rows. Here each block run-length-counts its own (dst, label) pairs
-    in numpy against the FRAGMENT-LOCAL mmap'd adjacency
-    (csr.spill_csr_blocks_indexed — edges cross Arrow exactly once, at
-    pack time), ships them as ≤B packed (ids, labels, counts) buffers
-    per block, and the receive cogroup finishes the count-sum +
-    (count DESC, label ASC) argmax — integer arithmetic throughout, so
-    the result is deterministic and hash-matches the join engine's SQL
-    twin exactly."""
+    rows. Here a round is one grouped pass per block: finish the inbox's
+    count-sum + (count DESC, label ASC) argmax into the block's labels,
+    then run-length-count the block's own (dst, label) pairs in numpy
+    against the mmap'd symmetric adjacency (direction 'both' — edges
+    cross Arrow exactly once, at pack time) and ship them as ≤B packed
+    (ids, labels, counts) buffers. Integer arithmetic throughout, so the
+    result is deterministic and hash-matches the join engine's SQL twin
+    exactly. Raises ValueError when the vertex table lacks an edge
+    endpoint."""
     import numpy as np
     import pandas as pd
 
     from graphscope_spark import csr as csrmod
-    from graphscope_spark.csr import argmax_packed_labels, block_expr
+    from graphscope_spark.csr import argmax_packed_labels
+    from graphscope_spark.pregel import BlockProgram, run_block_program
 
-    spark = g.spark
     if g.num_vertices == 0:
-        empty = spark.createDataFrame([], "id long, label long")
+        empty = g.spark.createDataFrame([], "id long, label long")
         return SuperstepResult(state=empty, rounds=0, metrics=[])
 
-    b = num_blocks or csrmod.default_num_blocks(g)
-    sd, _ = csrmod.spill_csr_blocks_indexed(g, b, direction="both")
+    def msg_dtype(bk):
+        # CDLP labels ARE vertex ids, so when every endpoint id fits
+        # int32 (the pack manifest's id range — no scan of the vertex
+        # table) the (ids, labels, counts) buffers ship as int32: HALF the
+        # Arrow/shuffle bytes. Counts fit: a block holds < 2³¹ edges.
+        return np.int32 if bk.manifest.fits_int32 else np.int64
 
-    # Message dtype: CDLP labels ARE vertex ids, so when every id fits
-    # int32 the (ids, labels, counts) message buffers ship as int32 —
-    # HALF the Arrow/shuffle bytes of the int64 spelling. The message
-    # volume (distinct (dst, label) pairs ≈ E in the early rounds before
-    # labels coalesce) is what makes CDLP the slowest LDBC number for the
-    # reference too; at V < 2³¹ this is free. One tiny agg over the
-    # cached vertices table decides it for both sides of the exchange.
-    _mm = g.vertices.agg(F.min("id"), F.max("id")).first()
-    use32 = (_mm[0] is not None and _mm[0] >= 0
-             and _mm[1] < 2**31)
-    msg_dt = np.int32 if use32 else np.int64
-
-    _STATE_SCHEMA = "blk int, n long, labels binary"
-
-    def _init_state(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one grouped pass: spill the sorted vertex ids (degs unused by
-        # this engine — zeros) AND emit the packed init row
-        ids = np.sort(pdf["id"].to_numpy(np.int64), kind="stable")
-        blk = int(pdf["blk"].iloc[0])
-        csrmod.save_vertex_arrays(
-            sd, blk, ids, np.zeros(ids.size, np.int64))
-        return pd.DataFrame([{
-            "blk": blk,
-            "n": int(ids.size),
-            "labels": ids.tobytes(),
-        }])
-
-    init = (
-        g.vertices.select("id", block_expr("id", b).alias("blk"))
-        .groupBy("blk")
-        .applyInPandas(_init_state, _STATE_SCHEMA)
-        .repartition(b, "blk")
-    )
-
-    def gather(key, pdf):
-        # the block's packed label row → per-(dst, label) run-length
-        # counts against the worker-local mmap'd adjacency.
-        #
-        # Kernel shape (round-5 pass — the label-histogram scatter was
-        # the per-core gap vs pagerank_block, VERDICT r4 #6): labels are
-        # DENSE-MAPPED block-locally (≤ n_src distinct — a V-sized
-        # unique, not E-sized), each edge's (dest-index, label-index)
-        # pair packs into ONE int64 `inv << 32 | lidx`, and a single
-        # in-place np.sort + run-length pass replaces the two E-sized
-        # stable argsorts + gathers the old path paid per round. Counts
-        # are integers and the label order inside each destination run
-        # (index asc = label asc, np.unique sorts) is unchanged, so the
-        # result is bit-identical.
-        empty = pd.DataFrame({
-            "sblk": pd.Series(dtype=np.int32),
-            "dblk": pd.Series(dtype=np.int32),
-            "ids": pd.Series(dtype=object),
-            "labels": pd.Series(dtype=object),
-            "counts": pd.Series(dtype=object),
-        })
-        blk = int(key[0])
-        buf = csrmod.load_spilled_block(sd, blk)
-        if buf is None or len(pdf) == 0:
-            return empty
-        vb = csrmod.load_spilled_vertices(sd, blk)
-        vids = np.asarray(vb["vids"])
-        labels = np.frombuffer(pdf.iloc[0]["labels"], np.int64)
-        srcs = np.asarray(buf["srcs"])
-        counts_e = np.diff(np.asarray(buf["indptr"]))
-        pos = np.searchsorted(vids, srcs)
-        lab_u, lidx = np.unique(labels, return_inverse=True)
-        lidx_src = lidx[pos].astype(np.int32)
-        pkey = (np.asarray(buf["inv"]).astype(np.int64) << 32) | np.repeat(
-            lidx_src, counts_e)
-        if pkey.size == 0:
-            return empty
+    def scatter(bk, state):
+        # Kernel shape: labels are DENSE-MAPPED block-locally (≤ n_src
+        # distinct — a V-sized unique, not E-sized), each edge's
+        # (dest-index, label-index) pair packs into ONE int64
+        # `inv << 32 | lidx`, and a single in-place np.sort + run-length
+        # pass counts the pairs. Label order inside each destination run
+        # (index asc = label asc, np.unique sorts) is the argmax's order.
+        dt = msg_dtype(bk)
+        c = bk.csr
+        # sources are checked against vids once, at PEval
+        pos = np.searchsorted(bk.vids, c["srcs"])
+        lab_u, lidx = np.unique(state["community"], return_inverse=True)
+        pkey = (np.asarray(c["inv"]).astype(np.int64) << 32) | np.repeat(
+            lidx[pos].astype(np.int32), np.diff(c["indptr"]))
         pkey.sort()
         first = np.concatenate(([True], pkey[1:] != pkey[:-1]))
         starts = np.flatnonzero(first)
-        cnt = np.diff(np.append(starts, pkey.size)).astype(msg_dt)
+        cnt = np.diff(np.append(starts, pkey.size)).astype(dt)
         ksel = pkey[starts]
-        rows = csrmod._emit_packed(
-            blk, buf["bounds"],
-            np.asarray(buf["uniq"]).astype(msg_dt, copy=False),
+        return csrmod._emit_packed(
+            bk.blk, c["bounds"], np.asarray(c["uniq"]).astype(dt, copy=False),
             ksel >> 32,
-            {"labels": lab_u.astype(msg_dt, copy=False)[ksel & 0xFFFFFFFF],
+            {"labels": lab_u.astype(dt, copy=False)[ksel & 0xFFFFFFFF],
              "counts": cnt},
         )
-        return pd.DataFrame(rows) if rows else empty
 
-    def update(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(right) == 0:
-            return pd.DataFrame(columns=["blk", "n", "labels"])
-        st = right.iloc[0]
-        blk = int(st["blk"])
-        new = np.frombuffer(st["labels"], np.int64).copy()
-        mids, mlabs = argmax_packed_labels(
-            left, dtypes=(msg_dt, msg_dt, msg_dt))
-        if mids.size:
-            vids = np.asarray(
-                csrmod.load_spilled_vertices(sd, blk)["vids"])
-            new[np.searchsorted(vids, mids)] = mlabs
-        return pd.DataFrame([{
-            "blk": blk, "n": int(new.size), "labels": new.tobytes(),
-        }])
+    def apply(bk, state, inbox, totals):
+        dt = msg_dtype(bk)
+        new = state["community"].copy()
+        mids, mlabs = argmax_packed_labels(inbox, dtypes=(dt, dt, dt))
+        new[csrmod.vertex_slots(bk.vids, mids)] = mlabs
+        return {"community": new}, {}
 
-    def step(state: DataFrame, rnd: int) -> DataFrame:
-        packed = state.groupBy("blk").applyInPandas(
-            gather,
-            "sblk int, dblk int, ids binary, labels binary, counts binary",
-        )
-        return (
-            packed.groupby("dblk")
-            .cogroup(state.groupby("blk"))
-            .applyInPandas(update, _STATE_SCHEMA)
-        )
-
-    runner = SuperstepRunner(spark, name="cdlp_block", truncate_every=1)
-    with csrmod.block_run_confs(spark, b):
-        res = runner.run(init, step, max_iter)
-
-    def _unpack(it):
-        for pdf in it:
-            for row in pdf.itertuples(index=False):
-                vb = csrmod.load_spilled_vertices(sd, int(row.blk))
-                yield pd.DataFrame({
-                    "id": np.asarray(vb["vids"]),
-                    "label": np.frombuffer(row.labels, np.int64),
-                })
-
-    state = res.state.mapInPandas(
-        _unpack, "id long, label long"
-    ).localCheckpoint(eager=True)
-    csrmod.cleanup_spill(sd)
-    return SuperstepResult(
-        state=state, rounds=res.rounds, metrics=res.metrics,
-        run_id=res.run_id,
+    prog = BlockProgram(
+        # the state buffer is each vertex's label; "labels" names the
+        # message buffer of neighbor labels
+        state={"community": np.int64}, messages=("ids", "labels", "counts"),
+        init=lambda bk: ({"community": bk.vids}, {}),
+        apply=apply, scatter=scatter,
+        unpack=lambda bk, st: pd.DataFrame(
+            {"id": bk.vids, "label": st["community"]}),
+        unpack_schema="id long, label long",
     )
+    return run_block_program(g, prog, g.vertices.select("id"), max_iter,
+                             num_blocks=num_blocks, direction="both")
 
 
 def lpa_by_color(g: Graph, max_rounds: int = 10) -> DataFrame:

@@ -25,7 +25,7 @@ the degree table on the receive side.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import Graph
@@ -242,264 +242,102 @@ def pagerank_block(
     this variant walks a packed indexed CSR with numpy inside Arrow-batched
     grouped UDFs — the gather-scatter loop of the reference's fragment
     kernel (benchmarks/apps/pagerank/pagerank.h:82-199 iterates the CSR
-    column index directly). The adjacency is FRAGMENT-LOCAL
-    (csr.spill_csr_blocks_indexed): packed once to .npy spill files and
-    mmap'd read-only by the Python workers, so edges cross the
-    JVM↔Python Arrow boundary exactly ONCE — the per-round dataflow is
+    column index directly). It runs on the block skeleton
+    (pregel.run_block_program): the out-adjacency is packed once into
+    mmap'd spill files, so edges cross the JVM↔Python Arrow boundary
+    exactly once, and a round is ONE grouped pass over the box of B
+    packed state rows and the messages addressed to them:
 
-      * the vertex state stays PACKED and MINIMAL: B rows ``(blk, n,
-        ranks, dang)`` — the invariant (vids, degs) arrays are spilled
-        at init and mmap'd, so a round moves Θ(V)·8 bytes of rank
-        buffer, never ids/degs, never edges;
-      * each block's SpMV is sort-free: searchsorted + repeat + bincount
-        over the mmap'd (srcs, indptr, inv) — three linear passes, with
-        the dst-block index (uniq, bounds) precomputed at pack time;
-      * partial sums ship as ≤B packed buffers per source block; the
-        receive side finishes the combine with one bincount directly
-        into the block's vertex slots;
-      * the dangling mass rides the state row as a scalar column — the
-        per-round allreduce is a SUM over B doubles.
+      * a block's state is its ranks buffer (Θ(V_b)·8 bytes) aligned with
+        the spilled (vids, degs) arrays — never ids/degs, never edges;
+      * the task merges its inbox in source-block order with one bincount
+        into the vertex slots, applies the update with the previous
+        round's dangling total, and scatters its next contributions:
+        searchsorted + repeat + bincount over the mmap'd (srcs, indptr,
+        inv), split by the dst-block index (uniq, bounds) precomputed at
+        pack time, shipped as ≤B packed buffers;
+      * the dangling mass is a vote: each state row carries its block's
+        Σ rank over out_deg = 0, and the driver sums the B values in
+        block order — the Communicator::Sum allreduce.
 
-    Deterministic: reruns are bit-identical (contributions accumulate in
-    (src,dst)-sorted edge order, buffers merge in sblk order — no
-    partition-order dependence). vs the join engine the per-destination
-    float add order differs at the ulp level only (gate twin rounds to 8
-    decimals; rel diff ~1e-16 measured). Scale contract: a block must
-    fit one core's memory (the reference's own per-fragment constraint)
-    — size ``num_blocks`` ≈ E / 10⁷⁻⁸; ``spill_dir`` must be visible to
-    every executor (node-local here; HDFS/NFS on a multi-node cluster —
-    the same locality decision vineyard makes for fragments,
-    docs/frag_intro.md).
+    Deterministic: reruns are bit-identical for any B (contributions
+    accumulate in (src,dst)-sorted edge order, buffers merge in sblk
+    order, the dangling total sums in block order). vs the join engine the
+    per-destination float add order differs at the ulp level only (gate
+    twin rounds to 8 decimals; rel diff ~1e-16 measured). Scale contract:
+    a block must fit one core's memory (the reference's own per-fragment
+    constraint) — size ``num_blocks`` ≈ E / 10⁷⁻⁸; ``spill_dir`` must be
+    visible to every executor (node-local here; HDFS/NFS on a multi-node
+    cluster — the same locality decision vineyard makes for fragments,
+    docs/frag_intro.md) and is kept when the caller passes it.
     """
     import numpy as np
     import pandas as pd
 
-    from graphscope_spark import csr as csrmod
-    from graphscope_spark.csr import block_expr
+    from graphscope_spark.pregel import BlockProgram, run_block_program
+    from graphscope_spark.csr import vertex_slots
 
-    spark = g.spark
     n = g.num_vertices
     if n == 0:
-        empty = spark.createDataFrame([], "id long, rank double")
+        empty = g.spark.createDataFrame([], "id long, rank double")
         return SuperstepResult(state=empty, rounds=0, metrics=[])
-
-    b = num_blocks or csrmod.default_num_blocks(g)
-    sd, _ = csrmod.spill_csr_blocks_indexed(g, b, spill_dir)
     teleport = (1.0 - alpha) / n
 
-    # g.degrees already left-joins EVERY vertex and fills 0 (graph.py) —
-    # re-joining g.vertices here would pay a second id-shuffle for nothing
-    vdf = g.degrees.select("id", "out_deg")
+    def votes(bk, rank, prev):
+        v = {"dang": float(rank[bk.degs == 0].sum())}
+        if tol is not None:
+            v["l1_delta"] = float(np.abs(rank - prev).sum())
+        return v
 
-    _STATE_SCHEMA = "blk int, n long, ranks binary, dang double"
+    def init(bk):
+        ranks = np.full(bk.vids.size, 1.0 / n, np.float64)
+        return {"ranks": ranks}, votes(bk, ranks, ranks)
 
-    def _init_state(pdf: pd.DataFrame) -> pd.DataFrame:
-        # ONE grouped pass: spill the invariant (vids, degs) arrays and
-        # emit the packed init state row (csr.save_vertex_arrays — saves
-        # the separate spill_vertex_arrays shuffle+pass, which was ~15%
-        # of the 8M-edge setup cost)
-        ids = pdf["id"].to_numpy(np.int64)
-        degs = pdf["out_deg"].to_numpy(np.int64)
-        o = np.argsort(ids, kind="stable")
-        ids = ids[o]
-        degs = degs[o]
-        blk = int(pdf["blk"].iloc[0])
-        csrmod.save_vertex_arrays(sd, blk, ids, degs)
-        ranks = np.full(ids.size, 1.0 / n, np.float64)
-        return pd.DataFrame([{
-            "blk": blk,
-            "n": int(ids.size),
-            "ranks": ranks.tobytes(),
-            "dang": float(ranks[degs == 0].sum()),
-        }])
+    def scatter(bk, state):
+        vals = np.divide(state["ranks"], bk.degs,
+                         out=np.zeros(bk.vids.size), where=bk.degs > 0)
+        c = bk.csr
+        per_edge = np.repeat(vals[np.searchsorted(bk.vids, c["srcs"])],
+                             np.diff(c["indptr"]))
+        sums = np.bincount(c["inv"], weights=per_edge,
+                           minlength=c["uniq"].size)
+        bounds = c["bounds"]
+        return [
+            {"sblk": bk.blk, "dblk": d,
+             "ids": np.ascontiguousarray(c["uniq"][lo:hi]).tobytes(),
+             "sums": sums[lo:hi].tobytes()}
+            for d, (lo, hi) in enumerate(zip(bounds[:-1], bounds[1:]))
+            if lo < hi  # no empty (sblk, dblk) pairs
+        ]
 
-    init = (
-        vdf.withColumn("blk", block_expr("id", b))
-        .groupBy("blk")
-        .applyInPandas(_init_state, _STATE_SCHEMA)
-        .repartition(b, "blk")
-    )
-
-    _MSG_SCHEMA = "sblk int, dblk int, ids binary, sums binary, dang double"
-
-    def gather(key, pdf):
-        # pdf: the block's (single) packed state row; adjacency and the
-        # block's sorted vertex ids/degrees come from the worker-local
-        # mmap — nothing edge-shaped enters through Arrow.
-        #
-        # The dangling-mass allreduce does NOT ride here: step() windows
-        # Σ dang over a (blk, dang) PROJECTION of the state (Θ(B) tiny
-        # rows through one single-partition exchange — NEVER the packed
-        # ranks blobs, which are Θ(V) bytes) and unions B dedicated
-        # sblk=-1 rows into the message shuffle, one per destination.
-        # Real messages carry ONLY non-empty (sblk,dblk) pairs (dang
-        # null) — at the 100 TB sizing (B ≈ 10⁴) a dang-carrying dense
-        # emit would be ~10⁸ tiny rows per superstep for nothing when
-        # the block-to-block connectivity is sparse.
-        empty = pd.DataFrame({
-            "sblk": pd.Series(dtype=np.int32),
-            "dblk": pd.Series(dtype=np.int32),
-            "ids": pd.Series(dtype=object),
-            "sums": pd.Series(dtype=object),
-            "dang": pd.Series(dtype=np.float64),
-        })
-        blk = int(key[0])
-        if len(pdf) == 0:
-            return empty
-        st = pdf.iloc[0]
-        buf = csrmod.load_spilled_block(sd, blk)
-        if buf is None:
-            # no out-edges from this block — its dangling mass reaches
-            # every receiver via the state-side dang_tot column
-            return empty
-        vb = csrmod.load_spilled_vertices(sd, blk)
-        ids = vb["vids"]
-        degs = vb["degs"]
-        ranks = np.frombuffer(st["ranks"], np.float64)
-        vals = np.divide(ranks, degs, out=np.zeros_like(ranks),
-                         where=degs > 0)
-        srcs = buf["srcs"]
-        indptr = buf["indptr"]
-        inv = buf["inv"]
-        uniq = buf["uniq"]
-        bounds = buf["bounds"]
-        per_edge = np.repeat(vals[np.searchsorted(ids, srcs)],
-                             np.diff(indptr))
-        sums = np.bincount(inv, weights=per_edge, minlength=uniq.size)
-        rows: list[dict] = []
-        for d in range(bounds.size - 1):
-            lo, hi = bounds[d], bounds[d + 1]
-            if lo < hi:  # suppress empty (sblk,dblk) pairs entirely
-                rows.append({
-                    "sblk": blk, "dblk": int(d),
-                    "ids": np.ascontiguousarray(uniq[lo:hi]).tobytes(),
-                    "sums": sums[lo:hi].tobytes(),
-                    "dang": None,
-                })
-        return pd.DataFrame(rows) if rows else empty
-
-    def update(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        # left: the non-empty packed message rows addressed to this block
-        # (≤1 per source block) PLUS exactly one sblk=-1 row whose `dang`
-        # column carries Σ dang over ALL blocks of the previous round
-        # (step() windows it over the tiny (blk,dang) projection,
-        # blk-ordered → deterministic, identical FP order to the old
-        # per-sblk sum); right: the block's packed state row.
-        if len(right) == 0:
-            return pd.DataFrame(columns=["blk", "n", "ranks", "dang"])
-        st = right.iloc[0]
-        blk = int(st["blk"])
-        vb = csrmod.load_spilled_vertices(sd, blk)
-        ids = vb["vids"]
-        degs = vb["degs"]
-        dang = 0.0
-        if len(left):
-            dser = left.loc[left["sblk"] < 0, "dang"]
-            if len(dser):
-                dang = float(dser.iloc[0])
-            left = left[left["sblk"] >= 0]
-        if len(left):
-            left = left.sort_values("sblk", kind="mergesort")
+    def apply(bk, state, inbox, totals):
+        gathered = np.zeros(bk.vids.size)
+        if len(inbox):
             mids = np.concatenate(
-                [np.frombuffer(x, np.int64) for x in left["ids"]])
+                [np.frombuffer(x, np.int64) for x in inbox["ids"]])
             msums = np.concatenate(
-                [np.frombuffer(x, np.float64) for x in left["sums"]])
-            pos = np.searchsorted(ids, mids)
-            gathered = np.bincount(pos, weights=msums, minlength=ids.size)
-        else:
-            gathered = np.zeros(ids.size, np.float64)
-        rank = alpha * gathered + teleport + alpha * dang / n
-        return pd.DataFrame([{
-            "blk": blk,
-            "n": int(ids.size),
-            "ranks": rank.tobytes(),
-            "dang": float(rank[np.asarray(degs) == 0].sum()),
-        }])
+                [np.frombuffer(x, np.float64) for x in inbox["sums"]])
+            gathered = np.bincount(vertex_slots(bk.vids, mids),
+                                   weights=msums, minlength=bk.vids.size)
+        rank = alpha * gathered + teleport + alpha * totals["dang"] / n
+        return {"ranks": rank}, votes(bk, rank, state["ranks"])
 
-    # dangling allreduce: Σ dang over a PROJECTION of the B packed state
-    # rows (blk + the dang scalar — the ranks blobs, Θ(V) bytes, never
-    # enter this exchange; round 5's first cut windowed the full state
-    # rows through one partition and cost 2.5× at the 100M probe), then
-    # B dedicated sblk=-1 rows join the message shuffle — Θ(B) tiny rows,
-    # no per-round BroadcastExchange/agg job, no Θ(B²) dense emit.
-    # orderBy("blk") + unbounded frame fixes the FP summation order.
-    _W_ALL = Window.orderBy("blk").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
+    def unpack(bk, state):
+        return pd.DataFrame({"id": bk.vids, "rank": state["ranks"],
+                             "out_deg": bk.degs})
 
-    def step(state: DataFrame, rnd: int) -> DataFrame:
-        dang_rows = (
-            state.select("blk", "dang")
-            .withColumn("d", F.sum("dang").over(_W_ALL))
-            .select(
-                F.lit(-1).cast("int").alias("sblk"),
-                F.col("blk").cast("int").alias("dblk"),
-                F.lit(b"").alias("ids"),
-                F.lit(b"").alias("sums"),
-                F.col("d").alias("dang"),
-            )
-        )
-        packed = state.groupBy("blk").applyInPandas(gather, _MSG_SCHEMA)
-        return (
-            packed.unionByName(dang_rows).groupby("dblk")
-            .cogroup(state.groupby("blk"))
-            .applyInPandas(update, _STATE_SCHEMA)
-        )
-
-    metrics_fn = None
-    should_stop = None
-    if tol is not None:
-        def _l1_map(it):
-            tot = 0.0
-            for pdf in it:
-                for a, b_ in zip(pdf["_r0"], pdf["ranks"]):
-                    tot += float(np.abs(
-                        np.frombuffer(a, np.float64)
-                        - np.frombuffer(b_, np.float64)
-                    ).sum())
-            yield pd.DataFrame({"eps": [tot]})
-
-        def metrics_fn(prev: DataFrame, new: DataFrame, rnd: int) -> dict:
-            eps = (
-                prev.select("blk", F.col("ranks").alias("_r0"))
-                .join(new.select("blk", "ranks"), "blk")
-                .mapInPandas(_l1_map, "eps double")
-                .agg(F.coalesce(F.sum("eps"), F.lit(0.0)))
-                .first()[0]
-            )
-            return {"l1_delta": float(eps)}
-
-        def should_stop(m: dict) -> bool:
-            return m["l1_delta"] < tol * n
-
-    # truncate EVERY round: the state is B packed rows, so the eager
-    # materialization is near-free and keeps the nested Python cogroup
-    # stages from recomputing (measured 2× at 8M edges/20 rounds).
-    runner = SuperstepRunner(spark, name="pagerank_block", truncate_every=1)
-    with csrmod.block_run_confs(spark, b):
-        res = runner.run(init, step, max_iter, metrics_fn=metrics_fn,
-                         should_stop=should_stop)
-
-    def _unpack(it):
-        for pdf in it:
-            for row in pdf.itertuples(index=False):
-                vb = csrmod.load_spilled_vertices(sd, int(row.blk))
-                yield pd.DataFrame({
-                    "id": np.asarray(vb["vids"]),
-                    "rank": np.frombuffer(row.ranks, np.float64),
-                    "out_deg": np.asarray(vb["degs"]),
-                })
-
-    # materialize the unpacked state BEFORE dropping the spill files the
-    # lazy plan would otherwise read (caller-owned spill_dir is kept)
-    state = res.state.mapInPandas(
-        _unpack, "id long, rank double, out_deg long"
-    ).localCheckpoint(eager=True)
-    if spill_dir is None:
-        csrmod.cleanup_spill(sd)
-    return SuperstepResult(
-        state=state, rounds=res.rounds, metrics=res.metrics,
-        run_id=res.run_id,
+    prog = BlockProgram(
+        state={"ranks": np.float64}, messages=("ids", "sums"),
+        init=init, apply=apply, scatter=scatter, unpack=unpack,
+        unpack_schema="id long, rank double, out_deg long",
+        votes=("dang",) if tol is None else ("dang", "l1_delta"),
+        should_stop=None if tol is None
+        else (lambda t: t["l1_delta"] < tol * n),
     )
+    # g.degrees already left-joins EVERY vertex and fills 0 (graph.py)
+    return run_block_program(
+        g, prog, g.degrees.select("id", "out_deg"), max_iter,
+        num_blocks=num_blocks, spill_dir=spill_dir)
 
 
 def pagerank_push(

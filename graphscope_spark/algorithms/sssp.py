@@ -165,94 +165,85 @@ def sssp_block(
     max_iter: int = 10_000,
     num_blocks: int | None = None,
 ) -> SuperstepResult:
-    """SSSP over hash-partitioned weighted CSR block DataFrames —
-    identical semantics AND bit-identical fixpoint to :func:`sssp`
-    (each relax candidate is the same two-operand double add, and float
-    min is order-free), alternative physical plan
-    (graphscope_spark/csr.py; see pagerank_block for the architecture).
+    """SSSP over hash-partitioned weighted CSR blocks — identical
+    semantics AND bit-identical fixpoint to :func:`sssp` (each relax
+    candidate is the same two-operand double add, and float min is
+    order-free), alternative physical plan on the block skeleton
+    (pregel.run_block_program; see pagerank_block).
 
-    Per round the changed frontier groups by block; numpy computes
-    per-destination candidate MINIMA (dist(u)+w, the relax + min combiner
-    of grape SSSPOpt) against the FRAGMENT-LOCAL mmap'd weighted
-    adjacency (csr.spill_csr_blocks_indexed) and ships ≤B packed
-    (ids, mins) buffers; the receive cogroup keeps-smaller against the
-    current state. Row-shaped shuffle per round is Θ(frontier) + Θ(V);
-    per-edge volume never crosses a boundary after the one-time pack.
-    Returns state
-    ``(id, dist, changed)`` with NULL dist for unreachable vertices —
-    the same surface as :func:`sssp`."""
+    A block's state is its distances (float64, +inf = unreached) and
+    last-round change mask, packed and aligned with the spilled sorted
+    vertex ids. A round is one grouped pass per block: keep the smaller
+    of each distance and the inbox's per-destination candidate minimum,
+    then relax the changed subset over the mmap'd weighted adjacency
+    (dist(u)+w, the relax + min combiner of grape SSSPOpt) and ship the
+    per-destination minima as ≤B packed (ids, mins) buffers. The
+    frontier size is the round's vote; the run stops after the first
+    round that improves no distance. Returns state ``(id, dist,
+    changed)`` with NULL dist for unreachable vertices — the same surface
+    as :func:`sssp`."""
     import numpy as np
     import pandas as pd
 
     from graphscope_spark import csr as csrmod
-    from graphscope_spark.csr import block_expr, merge_packed_fmin
+    from graphscope_spark.csr import merge_packed_fmin
+    from graphscope_spark.pregel import BlockProgram, run_block_program
 
-    spark = g.spark
     if g.num_vertices == 0:
-        empty = spark.createDataFrame([], "id long, dist double, changed boolean")
+        empty = g.spark.createDataFrame([], "id long, dist double, changed boolean")
         return SuperstepResult(state=empty, rounds=0, metrics=[])
 
-    b = num_blocks or csrmod.default_num_blocks(g)
-    sd, _ = csrmod.spill_csr_blocks_indexed(g, b, weight_col=weight_col)
-    inf = float("inf")
-    # +inf spells "unreachable" inside the loop (NaN would poison numpy
-    # mins); converted to the NULL surface at the end.
-    init = g.vertices.select(
-        "id",
-        F.when(F.col("id") == source, F.lit(0.0))
-        .otherwise(F.lit(inf)).alias("dist"),
-        (F.col("id") == source).alias("changed"),
-        block_expr("id", b).alias("blk"),
+    def init(bk):
+        changed = bk.vids == source
+        # +inf spells "unreachable" inside the loop (NaN would poison
+        # numpy mins); the unpack turns it into NULL
+        dists = np.where(changed, 0.0, np.inf)
+        return ({"dists": dists, "changed": changed},
+                {"frontier": float(changed.sum())})
+
+    def scatter(bk, state):
+        mask = state["changed"]
+        if not mask.any():
+            return []
+        dist_e, inv_m, emask = csrmod._frontier_edges(
+            bk.csr, bk.vids[mask], state["dists"][mask])
+        if inv_m.size == 0:
+            return []
+        ws = bk.csr.get("ws")
+        if ws is None:  # packed without weight_col → unit weights (BFS)
+            cand = dist_e + 1.0
+        else:
+            ws = np.asarray(ws)
+            cand = dist_e + (ws if emask is None else ws[emask])
+        sel, mins = csrmod._group_min(inv_m, cand)
+        return csrmod._emit_packed(bk.blk, bk.csr["bounds"], bk.csr["uniq"],
+                                   sel, {"mins": mins})
+
+    def apply(bk, state, inbox, totals):
+        dists = state["dists"]
+        new = dists.copy()
+        mids, mmins = merge_packed_fmin(inbox)
+        pos = csrmod.vertex_slots(bk.vids, mids)
+        new[pos] = np.minimum(new[pos], mmins)
+        changed = new < dists
+        return ({"dists": new, "changed": changed},
+                {"frontier": float(changed.sum())})
+
+    def unpack(bk, state):
+        # NaN crosses Arrow as NULL
+        dist = np.where(np.isinf(state["dists"]), np.nan, state["dists"])
+        return pd.DataFrame({"id": bk.vids, "dist": dist,
+                             "changed": state["changed"]})
+
+    prog = BlockProgram(
+        state={"dists": np.float64, "changed": np.bool_},
+        messages=("ids", "mins"),
+        init=init, apply=apply, scatter=scatter, unpack=unpack,
+        unpack_schema="id long, dist double, changed boolean",
+        votes=("frontier",), should_stop=lambda t: t["frontier"] == 0,
     )
-
-    def update(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(right) == 0:
-            return pd.DataFrame(columns=["id", "dist", "changed", "blk"])
-        ids = right["id"].to_numpy(np.int64)
-        dist = right["dist"].to_numpy(np.float64)
-        new = dist.copy()
-        mids, mmins = merge_packed_fmin(left)
-        if mids.size:
-            order = np.argsort(ids, kind="mergesort")
-            pos = np.searchsorted(ids, mids, sorter=order)
-            tgt = order[pos]
-            new[tgt] = np.minimum(new[tgt], mmins)
-        return pd.DataFrame({
-            "id": ids,
-            "dist": new,
-            "changed": new < dist,
-            "blk": right["blk"].to_numpy(np.int32),
-        })
-
-    def step(state: DataFrame, rnd: int) -> DataFrame:
-        frontier = state.filter("changed").select(
-            "blk", "id", F.col("dist").alias("val")
-        )
-        packed = csrmod.scatter_spilled_relax(frontier, sd, b)
-        receivers = state.select("blk", "id", "dist")
-        return (
-            packed.groupby("dblk")
-            .cogroup(receivers.groupby("blk"))
-            .applyInPandas(update, "id long, dist double, changed boolean, blk int")
-        )
-
-    def metrics_fn(prev: DataFrame, new: DataFrame, rnd: int) -> dict:
-        return {"frontier": int(new.filter("changed").count())}
-
-    runner = SuperstepRunner(spark, name="sssp_block", truncate_every=1)
-    with csrmod.block_run_confs(spark, b):
-        res = runner.run(init, step, max_iter, metrics_fn=metrics_fn,
-                         should_stop=lambda m: m["frontier"] == 0,
-                         check_every=2)
-    csrmod.cleanup_spill(sd)
-    return SuperstepResult(
-        state=res.state.select(
-            "id",
-            F.when(F.col("dist") != float("inf"), F.col("dist")).alias("dist"),
-            "changed",
-        ),
-        rounds=res.rounds, metrics=res.metrics, run_id=res.run_id,
-    )
+    return run_block_program(g, prog, g.vertices.select("id"), max_iter,
+                             num_blocks=num_blocks, weight_col=weight_col)
 
 
 def bfs(g: Graph, source: int, **kw) -> SuperstepResult:

@@ -251,6 +251,7 @@ def triangles_block(
         ]
         for f in futs:
             f.result()
+    _, manifest = futs[0].result()
 
     def _deg_of(ids_arr):
         # batched (deg, id) lookup across the owning blocks' spilled
@@ -275,7 +276,7 @@ def triangles_block(
             "tri": pd.Series(dtype=np.int64),
         })
         blk = int(key[0])
-        buf = csrmod.load_spilled_block(sd, blk)
+        buf = csrmod.load_spilled_block(sd, blk, int(manifest.n_edge[blk]))
         if buf is None:
             return empty
         srcs = np.asarray(buf["srcs"])

@@ -170,160 +170,70 @@ def wcc_block(
     max_iter: int = 200,
     num_blocks: int | None = None,
 ) -> SuperstepResult:
-    """WCC over hash-partitioned CSR block DataFrames — identical
-    semantics (and fixpoint) to :func:`wcc`, alternative physical plan
-    (graphscope_spark/csr.py; see pagerank_block for the architecture).
+    """WCC over hash-partitioned CSR blocks — identical semantics (and
+    fixpoint) to :func:`wcc`, alternative physical plan on the block
+    skeleton (pregel.run_block_program; see pagerank_block).
 
-    The vertex state stays PACKED: B rows ``(blk, n, comps, changed,
-    nchanged)`` whose buffers hold the block's component labels (int64)
-    and frontier mask (uint8) aligned with the spilled sorted vertex ids
-    — Θ(V)·9 bytes of state per round, never row-shaped. Per round each
-    block's changed subset scatters per-destination label MINIMA
-    block-locally against the FRAGMENT-LOCAL adjacency
-    (csr.spill_csr_blocks_indexed — mmap'd by the worker, edges cross
-    Arrow exactly once at pack time) as ≤B packed buffers; the receive
-    cogroup merges and keeps-smaller. Terminates when no label changes
-    (vote checked every 2 rounds via a SUM over B per-block counters —
-    min-label is monotone, late votes are free)."""
+    A block's state is its component labels (int64) and last-round
+    change mask aligned with the spilled sorted vertex ids — Θ(V_b)·9
+    bytes, never row-shaped. A round is one grouped pass per block: merge
+    the inbox's per-destination label minima and keep the smaller label,
+    then scatter the changed subset's minima over the mmap'd symmetric
+    adjacency (direction 'both' — the neighbor multiset of
+    wcc_projected.h:92-106) as ≤B packed buffers. The frontier size is
+    the round's vote; the run stops after the first round that changes
+    no label."""
     import numpy as np
     import pandas as pd
 
     from graphscope_spark import csr as csrmod
-    from graphscope_spark.csr import block_expr, merge_packed_min
+    from graphscope_spark.pregel import BlockProgram, run_block_program
 
-    spark = g.spark
     if g.num_vertices == 0:
-        empty = spark.createDataFrame([], "id long, comp long, changed boolean")
+        empty = g.spark.createDataFrame([], "id long, comp long, changed boolean")
         return SuperstepResult(state=empty, rounds=0, metrics=[])
 
-    b = num_blocks or csrmod.default_num_blocks(g)
-    sd, _ = csrmod.spill_csr_blocks_indexed(g, b, direction="both")
+    def init(bk):
+        changed = np.ones(bk.vids.size, bool)
+        return ({"comps": bk.vids, "changed": changed},
+                {"frontier": float(bk.vids.size)})
 
-    _STATE_SCHEMA = (
-        "blk int, n long, comps binary, changed binary, nchanged long"
-    )
-
-    def _init_state(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one grouped pass: spill the sorted vertex ids (degs unused by
-        # this engine — zeros) AND emit the packed init row
-        ids = np.sort(pdf["id"].to_numpy(np.int64), kind="stable")
-        blk = int(pdf["blk"].iloc[0])
-        csrmod.save_vertex_arrays(
-            sd, blk, ids, np.zeros(ids.size, np.int64))
-        return pd.DataFrame([{
-            "blk": blk,
-            "n": int(ids.size),
-            "comps": ids.tobytes(),
-            "changed": np.ones(ids.size, np.uint8).tobytes(),
-            "nchanged": int(ids.size),
-        }])
-
-    init = (
-        g.vertices.select("id", block_expr("id", b).alias("blk"))
-        .groupBy("blk")
-        .applyInPandas(_init_state, _STATE_SCHEMA)
-        .repartition(b, "blk")
-    )
-
-    def gather(key, pdf):
-        # the block's single packed state row → min-label messages from
-        # its CHANGED subset; adjacency and vertex ids come from the
-        # worker-local mmap.
-        empty = pd.DataFrame({
-            "sblk": pd.Series(dtype=np.int32),
-            "dblk": pd.Series(dtype=np.int32),
-            "ids": pd.Series(dtype=object),
-            "mins": pd.Series(dtype=object),
-        })
-        blk = int(key[0])
-        buf = csrmod.load_spilled_block(sd, blk)
-        if buf is None or len(pdf) == 0:
-            return empty
-        st = pdf.iloc[0]
-        if int(st["nchanged"]) == 0:
-            return empty
-        vb = csrmod.load_spilled_vertices(sd, blk)
-        vids = np.asarray(vb["vids"])
-        comps = np.frombuffer(st["comps"], np.int64)
-        mask = np.frombuffer(st["changed"], np.uint8).view(bool)
+    def scatter(bk, state):
+        mask = state["changed"]
+        if not mask.any():
+            return []
         per_edge, inv_m, _ = csrmod._frontier_edges(
-            buf, vids[mask], comps[mask]
-        )
+            bk.csr, bk.vids[mask], state["comps"][mask])
         if inv_m.size == 0:
-            return empty
+            return []
         sel, mins = csrmod._group_min(inv_m, per_edge)
-        rows = csrmod._emit_packed(blk, buf["bounds"], buf["uniq"], sel,
-                                   {"mins": mins})
-        return pd.DataFrame(rows) if rows else empty
+        return csrmod._emit_packed(bk.blk, bk.csr["bounds"], bk.csr["uniq"],
+                                   sel, {"mins": mins})
 
-    def update(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(right) == 0:
-            return pd.DataFrame(
-                columns=["blk", "n", "comps", "changed", "nchanged"])
-        st = right.iloc[0]
-        blk = int(st["blk"])
-        comps = np.frombuffer(st["comps"], np.int64)
+    def apply(bk, state, inbox, totals):
+        comps = state["comps"]
         new = comps.copy()
-        mids, mmins = merge_packed_min(left)
-        if mids.size:
-            vids = np.asarray(
-                csrmod.load_spilled_vertices(sd, blk)["vids"])
-            pos = np.searchsorted(vids, mids)
-            # mids are unique (merge_packed_min dedups) → plain fancy min
-            new[pos] = np.minimum(new[pos], mmins)
+        mids, mmins = csrmod.merge_packed_min(inbox)
+        pos = csrmod.vertex_slots(bk.vids, mids)
+        # mids are unique (merge_packed_min dedups) → plain fancy min
+        new[pos] = np.minimum(new[pos], mmins)
         changed = new < comps
-        return pd.DataFrame([{
-            "blk": blk,
-            "n": int(new.size),
-            "comps": new.tobytes(),
-            "changed": changed.astype(np.uint8).tobytes(),
-            "nchanged": int(changed.sum()),
-        }])
+        return ({"comps": new, "changed": changed},
+                {"frontier": float(changed.sum())})
 
-    def step(state: DataFrame, rnd: int) -> DataFrame:
-        packed = state.groupBy("blk").applyInPandas(
-            gather, "sblk int, dblk int, ids binary, mins binary"
-        )
-        return (
-            packed.groupby("dblk")
-            .cogroup(state.groupby("blk"))
-            .applyInPandas(update, _STATE_SCHEMA)
-        )
+    def unpack(bk, state):
+        return pd.DataFrame({"id": bk.vids, "comp": state["comps"],
+                             "changed": state["changed"]})
 
-    def metrics_fn(prev: DataFrame, new: DataFrame, rnd: int) -> dict:
-        return {
-            "frontier": int(
-                new.agg(F.coalesce(F.sum("nchanged"), F.lit(0))).first()[0]
-            )
-        }
-
-    def should_stop(m: dict) -> bool:
-        return m["frontier"] == 0
-
-    runner = SuperstepRunner(spark, name="wcc_block", truncate_every=1)
-    with csrmod.block_run_confs(spark, b):
-        res = runner.run(init, step, max_iter, metrics_fn=metrics_fn,
-                         should_stop=should_stop, check_every=2)
-
-    def _unpack(it):
-        for pdf in it:
-            for row in pdf.itertuples(index=False):
-                vb = csrmod.load_spilled_vertices(sd, int(row.blk))
-                yield pd.DataFrame({
-                    "id": np.asarray(vb["vids"]),
-                    "comp": np.frombuffer(row.comps, np.int64),
-                    "changed": np.frombuffer(row.changed, np.uint8)
-                    .view(bool),
-                })
-
-    state = res.state.mapInPandas(
-        _unpack, "id long, comp long, changed boolean"
-    ).localCheckpoint(eager=True)
-    csrmod.cleanup_spill(sd)
-    return SuperstepResult(
-        state=state, rounds=res.rounds, metrics=res.metrics,
-        run_id=res.run_id,
+    prog = BlockProgram(
+        state={"comps": np.int64, "changed": np.bool_},
+        messages=("ids", "mins"),
+        init=init, apply=apply, scatter=scatter, unpack=unpack,
+        unpack_schema="id long, comp long, changed boolean",
+        votes=("frontier",), should_stop=lambda t: t["frontier"] == 0,
     )
+    return run_block_program(g, prog, g.vertices.select("id"), max_iter,
+                             num_blocks=num_blocks, direction="both")
 
 
 def cc_log(g: Graph, max_iter: int = 64) -> DataFrame:

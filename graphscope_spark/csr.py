@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -667,7 +668,9 @@ def build_csr_blocks_indexed(g: Graph, num_blocks: int | None = None) -> DataFra
 # first touch and caches the mapping per worker process. Read-only mmap
 # pages are shared by the OS page cache across ALL Python workers on the
 # node — no per-process duplication, evictable under pressure. Edges
-# cross the JVM↔Python boundary exactly once, at pack time.
+# cross the JVM↔Python boundary exactly once, at pack time. The block
+# engines run their rounds over these files through one skeleton,
+# pregel.run_block_program.
 #
 # Cluster contract: ``spill_dir`` must be visible to every executor — a
 # node-local path works single-node (this sandbox; page-cache-shared),
@@ -718,18 +721,27 @@ def _save_atomic(path: str, arr: np.ndarray) -> None:
     os.replace(f"{tmp}.npy", path)
 
 
-def load_spilled_block(spill_dir: str, blk: int) -> dict | None:
+def load_spilled_block(spill_dir: str, blk: int, n_edge: int) -> dict | None:
     """The worker-side read: mmap the block's buffers on first touch,
     reuse the mapping for the life of the worker process (Spark reuses
-    Python workers across rounds). Returns None when the block has no
-    edges (no file was packed)."""
+    Python workers across rounds). ``n_edge`` is the block's edge count
+    from the pack's :class:`SpillManifest`: None for a block that packed
+    no edges, and FileNotFoundError for one that did but has no file — a
+    lost spill (an executor without the shared mount, a cleaned tmpfs)
+    must never read as an edge-less block that silently sends nothing."""
+    if n_edge == 0:
+        return None
     first = os.path.join(spill_dir, f"blk{int(blk)}_srcs.npy")
     key = (spill_dir, int(blk), "e", _spill_token(first))
     bufs = _CSR_SPILL_CACHE.get(key)
     if bufs is None:
         _purge_dead_spills()
         if not os.path.exists(first):
-            return None
+            raise FileNotFoundError(
+                f"CSR block {int(blk)} packed {int(n_edge)} edges but "
+                f"{first} is missing: the spill dir must stay visible to "
+                "every executor for the whole run"
+            )
         bufs = {
             name: np.load(
                 os.path.join(spill_dir, f"blk{int(blk)}_{name}.npy"),
@@ -742,6 +754,27 @@ def load_spilled_block(spill_dir: str, blk: int) -> dict | None:
             bufs["ws"] = np.load(wpath, mmap_mode="r")
         _CSR_SPILL_CACHE[key] = bufs
     return bufs
+
+
+@dataclass(frozen=True)
+class SpillManifest:
+    """What a spill returns to the driver — Θ(B), never edge-shaped:
+    ``n_edge[blk]`` is the edge count each block packed (0 for a block
+    with no edges, which writes no file), ``id_min``/``id_max`` the id
+    range over every packed edge endpoint (None when nothing was packed).
+    Kernels read their block through :func:`load_spilled_block` with its
+    ``n_edge``; the id range lets an engine pick a message dtype without
+    scanning the vertex table."""
+
+    n_edge: np.ndarray
+    id_min: int | None
+    id_max: int | None
+
+    @property
+    def fits_int32(self) -> bool:
+        """Every endpoint id is in [0, 2³¹) (vacuously so with no edges)."""
+        return self.id_min is None or (
+            self.id_min >= 0 and self.id_max < 2**31)
 
 
 def default_spill_dir() -> str:
@@ -757,7 +790,7 @@ def spill_csr_blocks_indexed(
     spill_dir: str | None = None,
     direction: str = "out",
     weight_col: str | None = None,
-) -> tuple[str, int]:
+) -> tuple[str, SpillManifest]:
     """Pack ``g``'s edges into indexed CSR blocks written to
     ``spill_dir`` (same buffers and bit-identical layout as
     :func:`build_csr_blocks_indexed`: srcs, indptr, per-edge int32 inv
@@ -765,8 +798,8 @@ def spill_csr_blocks_indexed(
     buffer aligned with the (src,dst)-sorted edge order when
     ``weight_col`` is set). ``direction`` as in
     :func:`build_csr_blocks` ('out' / 'in' / 'both'). One edge shuffle,
-    paid once; only a Θ(B) manifest returns to the JVM. Returns
-    ``(spill_dir, num_blocks)``."""
+    paid once; only a Θ(B) manifest returns to the driver. Returns
+    ``(spill_dir, manifest)`` (:class:`SpillManifest`)."""
     b = num_blocks or g.num_partitions
     cols = ["src", "dst"] + ([weight_col] if weight_col else [])
     # For a PERSISTED graph the src-partitioned out_edges cache is the
@@ -801,7 +834,7 @@ def spill_csr_blocks_from_edges(
     num_blocks: int,
     spill_dir: str | None = None,
     weight_col: str | None = None,
-) -> tuple[str, int]:
+) -> tuple[str, SpillManifest]:
     """:func:`spill_csr_blocks_indexed` over a RAW ``(src, dst[, w])``
     DataFrame — for derived edge tables (an oriented triangle graph, a
     projected view) that don't warrant a full :class:`Graph`."""
@@ -815,7 +848,7 @@ def spill_csr_blocks_from_edges(
 
     def _pack_spill(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) == 0:
-            return pd.DataFrame(columns=["blk", "n_src", "n_edge", "n_dst"])
+            return pd.DataFrame(columns=["blk", "n_edge", "id_min", "id_max"])
         if len(pdf) > _MAX_BLOCK_EDGES:
             raise ValueError(
                 f"CSR block of {len(pdf)} edges exceeds the 2 GiB Arrow "
@@ -855,17 +888,26 @@ def spill_csr_blocks_from_edges(
         for name, arr in bufs:
             _save_atomic(os.path.join(sd, f"blk{blk}_{name}.npy"), arr)
         return pd.DataFrame([{
-            "blk": blk, "n_src": int(srcs.size),
-            "n_edge": int(dst.size), "n_dst": int(uniq.size),
+            "blk": blk, "n_edge": int(dst.size),
+            "id_min": int(min(srcs[0], uniq[0])),
+            "id_max": int(max(srcs[-1], uniq[-1])),
         }])
 
-    (
+    rows = (
         e.withColumn("blk", block_expr("src", b))
         .groupBy("blk")
-        .applyInPandas(_pack_spill, "blk int, n_src long, n_edge long, n_dst long")
+        .applyInPandas(_pack_spill,
+                       "blk int, n_edge long, id_min long, id_max long")
         .collect()
     )
-    return sd, b
+    n_edge = np.zeros(b, np.int64)
+    for r in rows:
+        n_edge[r["blk"]] = r["n_edge"]
+    return sd, SpillManifest(
+        n_edge,
+        min((r["id_min"] for r in rows), default=None),
+        max((r["id_max"] for r in rows), default=None),
+    )
 
 
 def spill_sorted_keys(
@@ -984,29 +1026,35 @@ from contextlib import contextmanager  # noqa: E402
 
 @contextmanager
 def block_run_confs(spark, num_blocks: int):
-    """Session confs pinned for the duration of a block-engine run:
+    """Session confs pinned for the duration of a block-engine run, whose
+    superstep is one ``groupBy("dblk").applyInPandas`` over the B-row
+    box of packed state and messages (pregel.run_block_program):
 
-    * ``coalescePartitions`` OFF — AQE's post-shuffle coalescing merges
-      the B per-block groups into fewer, fatter tasks (measured: 24
-      blocks → 14 tasks at 100M edges), halving superstep parallelism.
-      Block granularity is chosen deliberately; runtime re-coalescing of
-      it is never right here.
-    * ``shuffle.partitions = num_blocks`` — grouped-UDF stages hash the
-      B group keys over this many partitions; matching the two keeps
-      every task one-block-sized (with B > cores the collision skew
+    * ``shuffle.partitions = num_blocks`` — the grouped-UDF exchange
+      hashes the B block keys over this many partitions; matching the two
+      keeps every task one-block-sized (with B > cores the collision skew
       amortizes over B/cores waves).
+    * ``adaptive.enabled`` OFF — a round's input is one cached box and
+      its output is the next one, so AQE has nothing to re-plan: it would
+      only split each round into a job per query stage (3 jobs per round
+      instead of 1, and 7-14% more wall per call, measured at 260k edges
+      on local[4]) and coalesce the B per-block groups into fewer, fatter
+      tasks (24 blocks → 14 tasks measured at 100M edges).
 
-    Restored on exit; plans compiled inside the scope keep the pinned
-    values at execution."""
-    p_coal = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    p_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(num_blocks))
+    Restored on exit; plans compiled inside the scope — including the
+    cached plan each round persists — keep the pinned values."""
+    confs = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(num_blocks),
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", p_coal)
-        spark.conf.set("spark.sql.shuffle.partitions", p_parts)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 # Minimum edges per block before splitting further: below this, the fixed
@@ -1045,9 +1093,6 @@ def default_num_blocks(g: Graph) -> int:
     return min(width, by_size)
 
 
-_I64_MAX = np.iinfo(np.int64).max
-
-
 def _group_min(inv_m: np.ndarray, per_edge: np.ndarray):
     """Per-group minima of ``per_edge`` grouped by ``inv_m`` (any dtype
     value array). Returns (group_idx ascending, mins). Radix argsort on
@@ -1072,45 +1117,8 @@ def _sort_by_group_then_value(inv_m: np.ndarray, vals: np.ndarray):
     return inv_m[o], vals[o]
 
 
-def scatter_spilled_min(
-    frontier: DataFrame, spill_dir: str, num_blocks: int
-) -> DataFrame:
-    """Spilled-CSR analog of :func:`scatter_packed_min`: the frontier is
-    ``(blk, id, val:int64)`` rows; each block's adjacency comes from the
-    worker-local mmap, so nothing edge-shaped crosses Arrow. Per block:
-    restrict edges to frontier sources, take per-destination MINIMA
-    (integer min — order-free), emit ≤B packed ``(sblk, dblk, ids,
-    mins)`` buffers. Merge with :func:`merge_packed_min`; bit-identical
-    values to the DataFrame-cogroup path."""
-
-    def gather(key, pdf):
-        empty = pd.DataFrame({
-            "sblk": pd.Series(dtype=np.int32),
-            "dblk": pd.Series(dtype=np.int32),
-            "ids": pd.Series(dtype=object),
-            "mins": pd.Series(dtype=object),
-        })
-        blk = int(key[0])
-        buf = load_spilled_block(spill_dir, blk)
-        if buf is None or len(pdf) == 0:
-            return empty
-        per_edge, inv_m, _ = _frontier_edges(
-            buf, pdf["id"].to_numpy(np.int64), pdf["val"].to_numpy(np.int64)
-        )
-        if inv_m.size == 0:
-            return empty
-        sel, mins = _group_min(inv_m, per_edge)
-        rows = _emit_packed(blk, buf["bounds"], buf["uniq"], sel,
-                            {"mins": mins})
-        return pd.DataFrame(rows) if rows else empty
-
-    return frontier.groupBy("blk").applyInPandas(
-        gather, "sblk int, dblk int, ids binary, mins binary"
-    )
-
-
 def _frontier_edges(buf: dict, ids: np.ndarray, val: np.ndarray):
-    """Shared frontier restriction for the spilled scatters: sort the
+    """Shared frontier restriction for the block scatters: sort the
     frontier, map block sources onto it, and return (per-edge value,
     per-edge inv index, per-edge mask) with edges from absent sources
     dropped. ``val`` may be any dtype (labels, distances...)."""
@@ -1153,90 +1161,22 @@ def _emit_packed(blk: int, bounds, uniq, sel_idx: np.ndarray,
     return rows
 
 
-def scatter_spilled_counts(
-    vals: DataFrame, spill_dir: str, num_blocks: int
-) -> DataFrame:
-    """Spilled-CSR analog of :func:`scatter_packed_counts`: per-block
-    (dst, label) run-length counts over the mmap'd adjacency — the
-    map-side partial of CDLP's histogram. ``vals`` is ``(blk, id,
-    val:int64)`` label rows. Finish with :func:`argmax_packed_labels`."""
-
-    def gather(key, pdf):
-        empty = pd.DataFrame({
-            "sblk": pd.Series(dtype=np.int32),
-            "dblk": pd.Series(dtype=np.int32),
-            "ids": pd.Series(dtype=object),
-            "labels": pd.Series(dtype=object),
-            "counts": pd.Series(dtype=object),
-        })
-        blk = int(key[0])
-        buf = load_spilled_block(spill_dir, blk)
-        if buf is None or len(pdf) == 0:
-            return empty
-        labels_e, inv_m, _ = _frontier_edges(
-            buf, pdf["id"].to_numpy(np.int64), pdf["val"].to_numpy(np.int64)
-        )
-        if inv_m.size == 0:
-            return empty
-        i_s, l_s = _sort_by_group_then_value(inv_m, labels_e)
-        first = np.concatenate(
-            ([True], (i_s[1:] != i_s[:-1]) | (l_s[1:] != l_s[:-1]))
-        )
-        starts = np.flatnonzero(first)
-        cnt = np.diff(np.append(starts, i_s.size)).astype(np.int64)
-        rows = _emit_packed(
-            blk, buf["bounds"], buf["uniq"], i_s[starts].astype(np.int64),
-            {"labels": l_s[starts], "counts": cnt},
-        )
-        return pd.DataFrame(rows) if rows else empty
-
-    return vals.groupBy("blk").applyInPandas(
-        gather,
-        "sblk int, dblk int, ids binary, labels binary, counts binary",
-    )
-
-
-def scatter_spilled_relax(
-    frontier: DataFrame, spill_dir: str, num_blocks: int
-) -> DataFrame:
-    """Spilled-CSR analog of :func:`scatter_packed_relax`: weighted
-    distance relaxation over the mmap'd adjacency (pack with
-    ``weight_col=`` so the ``ws`` buffer exists). ``frontier`` is
-    ``(blk, id, val:double)`` changed-vertex rows; each candidate is one
-    ``dist + w`` double add and float min is order-free — bit-equal
-    fixpoint to the cogroup path. Merge with :func:`merge_packed_fmin`."""
-
-    def gather(key, pdf):
-        empty = pd.DataFrame({
-            "sblk": pd.Series(dtype=np.int32),
-            "dblk": pd.Series(dtype=np.int32),
-            "ids": pd.Series(dtype=object),
-            "mins": pd.Series(dtype=object),
-        })
-        blk = int(key[0])
-        buf = load_spilled_block(spill_dir, blk)
-        if buf is None or len(pdf) == 0:
-            return empty
-        dist_e, inv_m, emask = _frontier_edges(
-            buf, pdf["id"].to_numpy(np.int64),
-            pdf["val"].to_numpy(np.float64),
-        )
-        if inv_m.size == 0:
-            return empty
-        ws = buf.get("ws")
-        if ws is None:  # packed without weight_col → unit weights (BFS)
-            cand = dist_e + 1.0
-        else:
-            ws = np.asarray(ws)
-            cand = dist_e + (ws if emask is None else ws[emask])
-        sel, mins = _group_min(inv_m, cand)
-        rows = _emit_packed(blk, buf["bounds"], buf["uniq"], sel,
-                            {"mins": mins})
-        return pd.DataFrame(rows) if rows else empty
-
-    return frontier.groupBy("blk").applyInPandas(
-        gather, "sblk int, dblk int, ids binary, mins binary"
-    )
+def vertex_slots(vids: np.ndarray, ids: np.ndarray) -> np.ndarray:
+    """Positions of ``ids`` in a block's sorted vertex array ``vids``.
+    Raises ValueError when one of them is not there — an edge endpoint
+    missing from a caller-supplied vertex table — instead of letting an
+    unchecked searchsorted land its value on a neighbouring vertex."""
+    pos = np.searchsorted(vids, ids)
+    if ids.size:
+        pos_c = np.minimum(pos, max(vids.size - 1, 0))
+        bad = (vids[pos_c] != ids) if vids.size else np.ones(ids.size, bool)
+        if bad.any():
+            raise ValueError(
+                f"vertex {int(ids[bad][0])} is an edge endpoint but not in "
+                "its block's vertex array: the vertex table must hold "
+                "every edge endpoint"
+            )
+    return pos
 
 
 def cleanup_spill(spill_dir: str) -> None:

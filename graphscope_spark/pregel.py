@@ -37,12 +37,16 @@ import time
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from graphscope_spark.graph import materialized_checkpoint
+from graphscope_spark import csr
+from graphscope_spark.graph import Graph, materialized_checkpoint
 
 
 @dataclass
@@ -307,3 +311,219 @@ def vertex_program(
         metrics=res.metrics,
         run_id=res.run_id,
     )
+
+
+# ------------------------------------------------------------------ #
+# Block programs — the PIE loop over spilled CSR blocks
+# ------------------------------------------------------------------ #
+
+
+class Block(NamedTuple):
+    """One block's fragment as its kernels see it: the block id, its
+    sorted vertex ids and their out-degrees (zeros unless the program's
+    vertex table has ``out_deg``), its spilled CSR buffers
+    (csr.load_spilled_block; None when the block has no edges) and the
+    pack's Θ(B) manifest (csr.SpillManifest)."""
+
+    blk: int
+    vids: np.ndarray
+    degs: np.ndarray
+    csr: dict | None
+    manifest: csr.SpillManifest
+
+
+@dataclass
+class BlockProgram:
+    """An algorithm on the block skeleton (:func:`run_block_program`):
+    numpy kernels only — the skeleton owns the spill, the box, the rounds,
+    the vote and the unpack.
+
+    * ``state``: the block's state buffers, name → numpy dtype, each
+      aligned with ``Block.vids``.
+    * ``messages``: names of the packed message buffers (binary; ``ids``
+      plus the payload, as csr._emit_packed writes them).
+    * ``votes``: per-block scalars that the driver sums in block order
+      after every round (PageRank's dangling mass, the WCC/SSSP frontier);
+      the totals reach the next ``apply`` and ``should_stop``.
+    * ``init(block) -> (state, votes)``: PEval's local computation.
+    * ``apply(block, state, inbox, totals) -> (state, votes)``: IncEval's
+      read of the inbox — the packed message rows addressed to the block,
+      sorted by source block.
+    * ``scatter(block, state) -> rows``: the outbox of ``state`` as
+      packed message rows ``{sblk, dblk, ids, ...}``; only called for a
+      block with edges.
+    * ``unpack(block, state) -> pandas.DataFrame``: the block's result
+      rows, of ``unpack_schema``.
+    * ``should_stop(totals)``: the termination vote; None runs exactly
+      ``max_rounds`` rounds.
+    """
+
+    state: dict
+    messages: tuple
+    init: Callable
+    apply: Callable
+    scatter: Callable
+    unpack: Callable
+    unpack_schema: str
+    votes: tuple = ()
+    should_stop: Callable | None = None
+
+
+def run_block_program(
+    g: Graph,
+    prog: BlockProgram,
+    vertices: DataFrame,
+    max_rounds: int,
+    num_blocks: int | None = None,
+    direction: str = "out",
+    weight_col: str | None = None,
+    spill_dir: str | None = None,
+) -> SuperstepResult:
+    """Run ``prog`` over ``g``'s edges packed into spilled CSR blocks —
+    GRAPE's PEval/IncEval loop (default_worker.h:90-131), one message
+    exchange per superstep.
+
+    The edges are packed once (csr.spill_csr_blocks_indexed;
+    ``direction`` and ``weight_col`` as there) into ``spill_dir``, which
+    the workers mmap, and ``vertices`` — ``(id[, out_deg])`` rows — is
+    grouped by block once. From then on a superstep moves only the BOX:
+    one DataFrame holding, per block, its self-addressed state row
+    (``sblk = -1``: the state buffers and vote scalars) plus the packed
+    messages addressed to it (``sblk`` = the sending block). A round is
+    exactly one ``groupBy("dblk").applyInPandas`` over the box: each task
+    applies its block's inbox to the state and, in the same task,
+    scatters the next round's outbox from the new state, writing the next
+    box. PEval is the init pass plus the first scatter; the last round of
+    a fixed-round program skips the scatter and writes the unpacked result
+    instead. A round is therefore one exchange, one Python task per block
+    and one materialization, whose job also collects the B ``(blk,
+    votes)`` rows that the driver sums in block order (deterministic for
+    any B).
+
+    Each box stays persisted until the next one is materialized, then is
+    freed, and so is the last one once the result is. The spill dir is
+    removed on exit — also when a kernel raises — unless the caller
+    passed ``spill_dir``. A block whose spill file is missing raises
+    instead of reading as edge-less (csr.SpillManifest)."""
+    b = num_blocks or csr.default_num_blocks(g)
+    sd = spill_dir or csr.default_spill_dir()
+    cols = ["sblk", "dblk", *prog.state, *prog.messages, *prog.votes]
+    box_schema = ", ".join(
+        ["sblk int", "dblk int"]
+        + [f"{c} binary" for c in (*prog.state, *prog.messages)]
+        + [f"{v} double" for v in prog.votes]
+    )
+    fixed = prog.should_stop is None
+    live: list[DataFrame] = []  # persisted here, not yet freed
+    try:
+        with csr.block_run_confs(g.spark, b):
+            _, manifest = csr.spill_csr_blocks_indexed(
+                g, b, sd, direction, weight_col)
+
+            def block(blk: int, vids=None, degs=None) -> Block:
+                if vids is None:
+                    vb = csr.load_spilled_vertices(sd, blk)
+                    if vb is None:
+                        raise FileNotFoundError(
+                            f"vertex arrays of block {blk} missing from {sd}")
+                    vids, degs = np.asarray(vb["vids"]), np.asarray(vb["degs"])
+                return Block(blk, vids, degs, csr.load_spilled_block(
+                    sd, blk, int(manifest.n_edge[blk])), manifest)
+
+            def decode(row) -> dict:
+                return {k: np.frombuffer(row[k], dt)
+                        for k, dt in prog.state.items()}
+
+            def emit(bk: Block, state: dict, votes: dict, scatter: bool):
+                rows = [{"sblk": -1, "dblk": bk.blk, **votes, **{
+                    k: np.ascontiguousarray(v).tobytes()
+                    for k, v in state.items()}}]
+                if scatter and bk.csr is not None:
+                    rows += prog.scatter(bk, state)
+                return pd.DataFrame(rows, columns=cols)
+
+            def peval(key, pdf):
+                ids = pdf["id"].to_numpy(np.int64)
+                o = np.argsort(ids, kind="stable")
+                degs = (pdf["out_deg"].to_numpy(np.int64)[o]
+                        if "out_deg" in pdf else np.zeros(ids.size, np.int64))
+                bk = block(int(key[0]), ids[o], degs)
+                csr.save_vertex_arrays(sd, bk.blk, bk.vids, bk.degs)
+                if bk.csr is not None:  # every source must be a vertex
+                    csr.vertex_slots(bk.vids, np.asarray(bk.csr["srcs"]))
+                state, votes = prog.init(bk)
+                return emit(bk, state, votes, max_rounds > 0)
+
+            def superstep(totals: dict, final: bool):
+                def fn(key, pdf):
+                    blk = int(key[0])
+                    own = pdf["sblk"].to_numpy() < 0
+                    if not own.any():
+                        raise ValueError(
+                            f"messages addressed to block {blk}, which has "
+                            "no vertices: the vertex table must hold every "
+                            "edge endpoint")
+                    bk = block(blk)
+                    inbox = pdf[~own].sort_values("sblk", kind="mergesort")
+                    state, votes = prog.apply(
+                        bk, decode(pdf[own].iloc[0]), inbox, totals)
+                    if final:
+                        return prog.unpack(bk, state)
+                    return emit(bk, state, votes, True)
+                return fn
+
+            def unpack(it):
+                for pdf in it:
+                    for row in pdf.to_dict("records"):
+                        yield prog.unpack(block(int(row["dblk"])), decode(row))
+
+            def materialize(df: DataFrame, vote: bool) -> dict:
+                df = df.persist(StorageLevel.MEMORY_AND_DISK)
+                live.append(df)
+                if not vote:
+                    df.count()
+                    return {}
+                # the materializing job IS the vote: B (blk, votes) rows
+                rows = sorted(df.filter(F.col("sblk") < 0)
+                              .select("dblk", *prog.votes).collect())
+                totals = {}
+                for i, v in enumerate(prog.votes):
+                    t = 0.0
+                    for r in rows:  # block order: bit-stable for any B
+                        t += r[i + 1]
+                    totals[v] = t
+                return totals
+
+            def advance(df: DataFrame, vote: bool) -> dict:
+                totals = materialize(df, vote)
+                live.pop(0).unpersist()
+                return totals
+
+            totals = materialize(
+                vertices.withColumn("blk", csr.block_expr("id", b))
+                .groupBy("blk").applyInPandas(peval, box_schema), True)
+            metrics: list[dict] = []
+            rnd = 0
+            for rnd in range(1, max_rounds + 1):
+                t0 = time.monotonic()
+                final = fixed and rnd == max_rounds
+                totals = advance(
+                    live[0].groupBy("dblk").applyInPandas(
+                        superstep(totals, final),
+                        prog.unpack_schema if final else box_schema),
+                    not final)
+                metrics.append({"superstep": rnd, "wall_ms":
+                                (time.monotonic() - t0) * 1000.0, **totals})
+                if not fixed and prog.should_stop(totals):
+                    break
+            if not (fixed and max_rounds > 0):
+                advance(live[0].filter(F.col("sblk") < 0)
+                        .select("dblk", *prog.state)
+                        .mapInPandas(unpack, prog.unpack_schema), False)
+            state = live.pop()
+    finally:
+        for df in live:
+            df.unpersist()
+        if spill_dir is None:
+            csr.cleanup_spill(sd)
+    return SuperstepResult(state=state, rounds=rnd, metrics=metrics)

@@ -114,12 +114,12 @@ BODY_SPILL = r"""
 # The reader identity is the pyspark.daemon pid — one daemon per
 # EXECUTOR JVM, so two distinct values proves both executors read; any
 # missing/miscounted block would prove a visibility hole.
-sd, b = csrmod.spill_csr_blocks_indexed(g, 8, None)
+sd, manifest = csrmod.spill_csr_blocks_indexed(g, 8, None)
 import pandas as pd
 
 def read_block(key, pdf):
     blk = int(key[0])
-    buf = csrmod.load_spilled_block(sd, blk)
+    buf = csrmod.load_spilled_block(sd, blk, int(manifest.n_edge[blk]))
     n = 0 if buf is None else int(np.diff(np.asarray(buf["indptr"])).sum())
     return pd.DataFrame([{"blk": blk, "n": n, "reader": os.getppid()}])
 
