@@ -8,6 +8,8 @@ pandas/Arrow UDFs for the few things built-ins can't express.
 
 Layout:
   session     — SparkSession factory tuned for graph supersteps (AQE, Arrow)
+  _zipguard   — in Spark's Python workers, re-read a zip's directory only
+                when the zip changed (not on every task)
   graph       — Graph substrate: vertices/edges DataFrames, dense ids, degrees
   pregel      — superstep kernel + declarative vertex_program API
                 (@pregel analog): message join/agg loop, convergence votes,
@@ -29,5 +31,8 @@ Layout:
 
 __version__ = "0.1.0"
 
+from graphscope_spark import _zipguard
 from graphscope_spark.graph import Graph  # noqa: F401
 from graphscope_spark.session import get_spark  # noqa: F401
+
+_zipguard.install()

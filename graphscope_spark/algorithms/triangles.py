@@ -112,7 +112,11 @@ def triangles(g: Graph, engine: str = "auto") -> DataFrame:
 
 def triangle_count(g: Graph, engine: str = "auto") -> int:
     """Global triangle count = Σ per-vertex / 3."""
-    total = triangles(g, engine=engine).agg(F.sum("tri")).first()[0] or 0
+    tri = triangles(g, engine=engine)
+    try:
+        total = tri.agg(F.sum("tri")).first()[0] or 0
+    finally:
+        tri.unpersist()  # the block engine's result is persisted
     return int(total) // 3
 
 
@@ -169,50 +173,64 @@ def triangles_block(
     Exact, deterministic, identical to :func:`triangles`. Scale contract:
     ``spill_dir`` must be visible to every executor (csr.py:642-650) and
     a block's CSR must fit one core — size ``num_blocks`` like the other
-    block engines."""
-    import numpy as np
-    import pandas as pd
-
+    block engines. The spill dir is removed on return, also when a
+    kernel raises, unless the caller passed ``spill_dir``; the result is
+    persisted, and its ``unpersist()`` frees it."""
     from graphscope_spark import csr as csrmod
 
-    spark = g.spark
     if g.num_vertices == 0:
-        return spark.createDataFrame([], "id long, tri long")
+        return g.spark.createDataFrame([], "id long, tri long")
     own_canon = canon is None
     if canon is None:
         canon = _undirected_simple_edges(g).persist()
-    if canon_stats is None:
-        row = canon.agg(
-            F.count(F.lit(1)).alias("m"),
-            F.min("u").alias("mn"),
-            F.greatest(F.max("u"), F.max("v")).alias("mx"),
-        ).first()
-        canon_stats = (int(row["m"] or 0),
-                       int(row["mn"]) if row["mn"] is not None else 0,
-                       int(row["mx"]) if row["mx"] is not None else 0)
-    m, mn, mx = canon_stats
-    zeros = g.vertices.select("id", F.lit(0).cast("long").alias("tri"))
-    if m == 0:
+    try:
+        if canon_stats is None:
+            row = canon.agg(
+                F.count(F.lit(1)).alias("m"),
+                F.min("u").alias("mn"),
+                F.greatest(F.max("u"), F.max("v")).alias("mx"),
+            ).first()
+            canon_stats = (int(row["m"] or 0),
+                           int(row["mn"]) if row["mn"] is not None else 0,
+                           int(row["mx"]) if row["mx"] is not None else 0)
+        m, mn, mx = canon_stats
+        if m == 0:
+            return g.vertices.select("id", F.lit(0).cast("long").alias("tri"))
+        # closing-edge keys are (u-mn)*K + (v-mn) with K = the id RANGE,
+        # so the packing is injective for ANY int64 ids, including
+        # negatives — packing on max_id alone collides for min_id < 0
+        # (e.g. edges (-3,5) and the non-edge (-2,-1) both pack to -13 at
+        # K=6: phantom triangles). min(u) is the graph's min id
+        # (canonical u < v).
+        K = mx - mn + 1
+        if K > _MAX_KEY_BASE:
+            # ids too sparse for the int64 key packing: the join plan has
+            # no such bound
+            return triangles(g, engine="join")
+        cores = g.spark.sparkContext.defaultParallelism
+        width = max(g.num_partitions, 2 * cores)
+        b = num_blocks or max(1, min(width, -(-m // csrmod._MIN_BLOCK_EDGES)))
+        sd = spill_dir or csrmod.default_spill_dir()
+        try:
+            return _spilled_triangles(g, canon, b, mn, K, sd)
+        finally:
+            if spill_dir is None:  # also when a kernel raised
+                csrmod.cleanup_spill(sd)
+    finally:
         if own_canon:
             canon.unpersist()
-        return zeros
-    # closing-edge keys are (u-mn)*K + (v-mn) with K = the id RANGE, so
-    # the packing is injective for ANY int64 ids, including negatives —
-    # packing on max_id alone collides for min_id < 0 (e.g. edges (-3,5)
-    # and the non-edge (-2,-1) both pack to -13 at K=6: phantom
-    # triangles). min(u) is the graph's min id (canonical u < v).
-    K = mx - mn + 1
-    if K > _MAX_KEY_BASE:
-        # ids too sparse for the int64 key packing: the join plan has no
-        # such bound
-        if own_canon:
-            canon.unpersist()
-        return triangles(g, engine="join")
 
-    cores = spark.sparkContext.defaultParallelism
-    width = max(g.num_partitions, 2 * cores)
-    b = num_blocks or max(1, min(width, -(-m // csrmod._MIN_BLOCK_EDGES)))
-    sd = spill_dir or csrmod.default_spill_dir()
+
+def _spilled_triangles(g: Graph, canon: DataFrame, b: int, mn: int, K: int,
+                       sd: str) -> DataFrame:
+    """:func:`triangles_block`'s three spills and its kernel over ``b``
+    blocks in ``sd``. The counts come back persisted and materialized,
+    so the caller's ``unpersist()`` frees them."""
+    import numpy as np
+    import pandas as pd
+    from pyspark import StorageLevel
+
+    from graphscope_spark import csr as csrmod
 
     deg = (
         canon.select(F.col("u").alias("id"))
@@ -252,6 +270,7 @@ def triangles_block(
         for f in futs:
             f.result()
     _, manifest = futs[0].result()
+    n_keys = futs[2].result()
 
     def _deg_of(ids_arr):
         # batched (deg, id) lookup across the owning blocks' spilled
@@ -353,7 +372,7 @@ def triangles_block(
                 lo, hi = bounds[t], bounds[t + 1]
                 if lo == hi:
                     continue
-                ck = csrmod.load_spilled_keys(sd, t)
+                ck = csrmod.load_spilled_keys(sd, t, int(n_keys[t]))
                 pos = np.searchsorted(ck, keys_s[lo:hi])
                 ok = pos < ck.size
                 ok[ok] = ck[pos[ok]] == keys_s[lo:hi][ok]
@@ -386,22 +405,24 @@ def triangles_block(
         uids, cnts = np.unique(ids, return_counts=True)
         return pd.DataFrame({"id": uids, "tri": cnts.astype(np.int64)})
 
-    blocks = spark.range(b).select(F.col("id").cast("int").alias("blk"))
-    with csrmod.block_run_confs(spark, b):
+    blocks = g.spark.range(b).select(F.col("id").cast("int").alias("blk"))
+    with csrmod.block_run_confs(g.spark, b):
         parts = (
             blocks.repartition(b, "blk")
             .groupBy("blk")
             .applyInPandas(kernel, "id long, tri long")
         )
         counts = parts.groupBy("id").agg(F.sum("tri").alias("tri"))
+        # materialized while the spill dir the kernel reads still exists
         result = (
             g.vertices.select("id")
             .join(counts, "id", "left")
             .select("id", F.coalesce(F.col("tri"), F.lit(0)).alias("tri"))
-            .localCheckpoint(eager=True)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-    if own_canon:
-        canon.unpersist()
-    if spill_dir is None:
-        csrmod.cleanup_spill(sd)
+        try:
+            result.count()
+        except BaseException:
+            result.unpersist()
+            raise
     return result

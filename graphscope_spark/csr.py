@@ -912,12 +912,14 @@ def spill_csr_blocks_from_edges(
 
 def spill_sorted_keys(
     keyed: DataFrame, num_blocks: int, spill_dir: str, name: str = "ckeys"
-) -> None:
+) -> np.ndarray:
     """Spill an int64 key set as per-block SORTED arrays
     (``blk{j}_{name}.npy``), block = the DataFrame's ``blk`` column.
     Worker kernels membership-test against any block's array with one
     ``searchsorted`` over the mmap (used by the triangle kernel for the
-    closing-edge probe). One shuffle, paid once."""
+    closing-edge probe). One shuffle, paid once. Returns the key count
+    per block (0 for a block that spilled no file), which
+    :func:`load_spilled_keys` checks."""
 
     def _pack_k(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) == 0:
@@ -927,28 +929,40 @@ def spill_sorted_keys(
         _save_atomic(os.path.join(spill_dir, f"blk{blk}_{name}.npy"), ks)
         return pd.DataFrame([{"blk": blk, "n": int(ks.size)}])
 
-    (
+    rows = (
         keyed.select("blk", "key")
         .groupBy("blk")
         .applyInPandas(_pack_k, "blk int, n long")
         .collect()
     )
+    n = np.zeros(num_blocks, np.int64)
+    for r in rows:
+        n[r["blk"]] = r["n"]
+    return n
 
 
 def load_spilled_keys(
-    spill_dir: str, blk: int, name: str = "ckeys"
+    spill_dir: str, blk: int, n: int, name: str = "ckeys"
 ):
-    """Worker-side mmap of one block's sorted key array (empty array when
-    the block spilled nothing), cached per process."""
+    """Worker-side mmap of one block's sorted key array, cached per
+    process. ``n`` is the block's key count from
+    :func:`spill_sorted_keys`: an empty array for a block that spilled no
+    keys, FileNotFoundError for one that did but has no file — a lost
+    key file must never read as "no closing edges" and undercount."""
+    if n == 0:
+        return np.empty(0, np.int64)
     path = os.path.join(spill_dir, f"blk{int(blk)}_{name}.npy")
     key = (spill_dir, int(blk), name, _spill_token(path))
     arr = _CSR_SPILL_CACHE.get(key)
     if arr is None:
         _purge_dead_spills()
         if not os.path.exists(path):
-            arr = np.empty(0, np.int64)
-        else:
-            arr = np.load(path, mmap_mode="r")
+            raise FileNotFoundError(
+                f"block {int(blk)} spilled {int(n)} keys but {path} is "
+                "missing: the spill dir must stay visible to every "
+                "executor for the whole run"
+            )
+        arr = np.load(path, mmap_mode="r")
         _CSR_SPILL_CACHE[key] = arr
     return arr
 

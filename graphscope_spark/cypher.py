@@ -178,6 +178,23 @@ def _parens_balanced(s: str) -> bool:
     return depth == 0
 
 
+# a CASE/END keyword is a whole word: no letter, digit, _ or . (property
+# access, as in n.end or a.showcase) on either side
+_CASE_END = re.compile(r"(?is)(?<![\w.])(CASE|END)(?![\w.])")
+
+
+def _keyword(t: str, i: int) -> str | None:
+    """The CASE/END keyword starting at ``t[i]``, upper-cased, or None."""
+    m = _CASE_END.match(t, i)
+    return m.group(1).upper() if m else None
+
+
+def _mask_quotes(t: str) -> str:
+    """``t`` with each quoted literal's body blanked, same length."""
+    return re.sub(r"'(?:[^']|'')*'",
+                  lambda m: "'" + " " * (len(m.group(0)) - 2) + "'", t)
+
+
 def _top_level_op(t: str, ops: str) -> int | None:
     """Rightmost position of a BINARY operator from ``ops`` at paren
     depth 0 outside quotes — None if absent. A +/- preceded (ignoring
@@ -198,18 +215,19 @@ def _top_level_op(t: str, ops: str) -> int | None:
             depth += 1
         elif ch == ")":
             depth -= 1
-        elif depth == 0 and re.match(r"(?is)CASE\b", t[i:]):
+        elif depth == 0 and _keyword(t, i) == "CASE":
             # a CASE...END block is opaque to the operator scan (its WHEN
             # arms hold arbitrary expressions at this paren depth) — jump
-            # to the matching END, honoring nested CASEs
+            # to the matching END, honoring nested CASEs; keywords inside
+            # quotes are masked, length-preserving
             nest = 0
-            for m in re.finditer(r"(?is)\b(CASE|END)\b", t[i:]):
+            for m in _CASE_END.finditer(_mask_quotes(t), i):
                 nest += 1 if m.group(1).upper() == "CASE" else -1
                 if nest == 0:
-                    i += m.end() - 1
+                    i = m.end() - 1
                     break
             else:
-                return None  # unbalanced CASE — let _term's grammar complain
+                raise ValueError(f"unbalanced CASE (no matching END): {t!r}")
         elif depth == 0 and ch in ops:
             prev = t[:i].rstrip()
             if not prev or prev[-1] in "+-*/%(<>=,":
@@ -386,7 +404,7 @@ class CypherSession:
         if t.startswith("(") and t.endswith(")") \
                 and _parens_balanced(t[1:-1]):
             return self._term(t[1:-1], bind)
-        if re.match(r"(?is)^CASE\b", t) and re.search(r"(?is)\bEND\s*$", t):
+        if _keyword(t, 0) == "CASE" and re.search(r"(?is)(?<![\w.])END\s*$", t):
             # searched CASE: CASE WHEN c THEN v [WHEN c THEN v]...
             # [ELSE v] END → Catalyst when/otherwise chain (JVM-side;
             # the reference marks Cypher CASE "planned",

@@ -268,6 +268,9 @@ def eval_gremlin(
     if src_name not in ("V", "E"):
         raise ValueError("gremlin query must start with g.V() or g.E()")
     src_args = [_literal(t) for t in _parse_literal_list(ts)]
+    if src_name == "E" and src_args:
+        raise ValueError("g.E(<ids>) is not supported: edges have no ids "
+                         "here, start from g.E()")
     g = traversal(graph, vertex_props)
     t: Any = g.V(*src_args) if src_name == "V" else g.E()
     for name, args in _parse_chain(ts):

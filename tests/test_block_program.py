@@ -1,7 +1,8 @@
 """The block-program skeleton (pregel.run_block_program) under the four
-block engines: one grouped pass per round, no persisted RDD or spill dir
-left behind (also when a kernel raises), a lost spill file raises, and a
-vertex table missing an edge endpoint raises."""
+block engines, and block triangles beside it: one grouped pass per round,
+no persisted RDD or spill dir left behind (also when a kernel raises), a
+lost spill file raises, and a vertex table missing an edge endpoint
+raises."""
 
 import glob
 import os
@@ -15,6 +16,7 @@ from graphscope_spark import csr
 from graphscope_spark.algorithms import (
     cdlp_block, pagerank_block, sssp_block, wcc_block,
 )
+from graphscope_spark.algorithms.triangles import triangles_block
 from graphscope_spark.graph import Graph
 from graphscope_spark.pregel import BlockProgram, run_block_program
 
@@ -101,6 +103,48 @@ def test_missing_spill_file_raises(spark, g, monkeypatch):
         wcc_block(g, num_blocks=3)
     assert "blk" in lost
     assert _spill_dirs() - spills == set()
+
+
+def test_triangles_block_result_is_freeable(spark, g):
+    triangles_block(g, num_blocks=2).unpersist()  # warm the Graph's caches
+    before, spills = _persisted(spark), _spill_dirs()
+    res = triangles_block(g, num_blocks=2)
+    assert res.count() == g.num_vertices
+    res.unpersist()
+    assert _persisted(spark) - before == set()
+    assert _spill_dirs() - spills == set()
+
+
+def _lose_after_spill(monkeypatch, fn: str, buf: str) -> None:
+    """Make ``csr.<fn>`` delete one block's ``buf`` file after spilling."""
+    real = getattr(csr, fn)
+
+    def spill_then_lose(*args, **kwargs):
+        out = real(*args, **kwargs)
+        sd = args[2]
+        os.remove(sorted(glob.glob(os.path.join(sd, f"blk*_{buf}.npy")))[0])
+        return out
+
+    monkeypatch.setattr(csr, fn, spill_then_lose)
+
+
+def test_raising_triangle_kernel_releases_spill_and_canon(spark, g,
+                                                          monkeypatch):
+    triangles_block(g, num_blocks=2).unpersist()
+    _lose_after_spill(monkeypatch, "spill_csr_blocks_from_edges", "srcs")
+    before, spills = _persisted(spark), _spill_dirs()
+    with pytest.raises(Exception, match="is missing"):
+        triangles_block(g, num_blocks=2)
+    assert _spill_dirs() - spills == set()
+    assert _persisted(spark) - before == set()
+
+
+def test_lost_closing_key_file_raises(spark, g, monkeypatch):
+    # one block: every wedge's closing-edge probe reads the lost file,
+    # which used to read as "no keys" and count 0 triangles
+    _lose_after_spill(monkeypatch, "spill_sorted_keys", "ckeys")
+    with pytest.raises(Exception, match="keys but .* is missing"):
+        triangles_block(g, num_blocks=1)
 
 
 def test_cdlp_block_rejects_vertex_table_without_an_endpoint(spark):

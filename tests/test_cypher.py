@@ -307,6 +307,26 @@ def test_return_arithmetic(cs_price):
     assert all(r["m"] == (r["a"] * 10) % 3 for r in rows)
 
 
+def test_case_matches_only_a_whole_word(spark):
+    # `showcase` ends in `case`: the operator scan must not take it for a
+    # CASE block and lose the `+`
+    e = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    props = spark.createDataFrame(
+        [(i, i * 10, i) for i in range(1, 4)], "id long, showcase long, end long")
+    cs = CypherSession(Graph(e, directed=True, num_partitions=2),
+                       vertex_props=props)
+    rows = cs.run(
+        "MATCH (a)-[]->(b) RETURN a, a.showcase + b.end AS x ORDER BY a"
+    ).collect()
+    assert [(r["a"], r["x"]) for r in rows] == [(1, 12), (2, 23)]
+
+
+def test_unbalanced_case_raises(cs_price):
+    with pytest.raises(ValueError, match="unbalanced CASE"):
+        cs_price.run("MATCH (a)-[]->(b) RETURN a, "
+                     "CASE WHEN a.price > 20 THEN 1 ELSE 0 + 5 AS y")
+
+
 def test_multi_with_chain(cs):
     # degree -> histogram in two WITH hops, then RETURN
     rows = cs.run(

@@ -99,3 +99,10 @@ def test_parse_errors(g):
         eval_gremlin("g.V().repeat(__.out())", g)
     with pytest.raises(ValueError, match="terminal"):
         eval_gremlin("g.V().count().out()", g)
+
+
+def test_edge_source_rejects_ids(g):
+    # g.E(ids) used to drop its arguments and return every edge
+    with pytest.raises(ValueError, match=r"g\.E\(<ids>\)"):
+        eval_gremlin("g.E(1).count()", g)
+    assert eval_gremlin("g.E().count()", g).first()[0] == 7
