@@ -23,7 +23,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import Graph
-from graphscope_spark.pregel import SuperstepRunner, SuperstepResult
+from graphscope_spark.pregel import (
+    SuperstepResult, SuperstepRunner, choose_engine,
+)
 
 
 def _sensor_floor() -> int:
@@ -41,8 +43,19 @@ def cdlp(
     run_id: str | None = None,
     resume: bool = False,
     skew: str | None = "auto",
+    engine: str = "auto",
+    spill_dir: str | None = None,
 ) -> SuperstepResult:
     """Returns state ``(id: long, label: long)``.
+
+    ``engine``: ``"block"`` = :func:`cdlp_block` (with ``max_iter`` and
+    ``spill_dir``), ``"join"`` = the row-join engine below, ``"auto"``
+    (default) = the block engine unless the call needs the join engine —
+    ``checkpoint_dir``, ``resume`` or ``run_id`` — or the executors may
+    run on other hosts (a master other than ``local[...]`` /
+    ``local-cluster[...]``) and no shared ``spill_dir`` was given, or the
+    vertex table misses an edge endpoint (pregel.choose_engine). Both
+    engines return identical rows; ``skew`` shapes only the join plan.
 
     ``skew="auto"`` (default): when a measured hub's edge block exceeds a
     partition's fair share (operators/skew.py measured_hub_keys), SALT
@@ -52,6 +65,9 @@ def cdlp(
     table in operators/skew.py. Integer counting + deterministic
     (count DESC, label ASC) tie-break → salted runs are bit-identical.
     Empty hub set (uniform input) → plain path. ``skew=None`` disables."""
+    if choose_engine(g, engine, spill_dir, checkpoint_dir=checkpoint_dir,
+                     resume=resume, run_id=run_id) == "block":
+        return cdlp_block(g, max_iter=max_iter, spill_dir=spill_dir)
     spark = g.spark
     edges = g.out_edges.select("src", "dst")
     salted_src = salted_dst = None
@@ -131,6 +147,7 @@ def cdlp_block(
     g: Graph,
     max_iter: int = 10,
     num_blocks: int | None = None,
+    spill_dir: str | None = None,
 ) -> SuperstepResult:
     """CDLP over hash-partitioned CSR blocks — identical semantics to
     :func:`cdlp` (LDBC most-frequent-neighbor-label, ties → min,
@@ -210,7 +227,8 @@ def cdlp_block(
         unpack_schema="id long, label long",
     )
     return run_block_program(g, prog, g.vertices.select("id"), max_iter,
-                             num_blocks=num_blocks, direction="both")
+                             num_blocks=num_blocks, direction="both",
+                             spill_dir=spill_dir)
 
 
 def lpa_by_color(g: Graph, max_rounds: int = 10) -> DataFrame:

@@ -29,7 +29,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import Graph
-from graphscope_spark.pregel import SuperstepRunner, SuperstepResult
+from graphscope_spark.pregel import (
+    SuperstepResult, SuperstepRunner, choose_engine,
+)
 
 
 def pagerank(
@@ -46,9 +48,22 @@ def pagerank(
     hub_top_n: int = 16,
     hub_isolate: bool = False,
     skew: str | None = "auto",
+    engine: str = "auto",
+    spill_dir: str | None = None,
 ) -> SuperstepResult:
     """Returns SuperstepResult whose state is ``(id: long, rank: double,
     out_deg: long)`` (out_deg rides along so no per-round degree join).
+
+    ``engine``: ``"block"`` = :func:`pagerank_block` (with ``alpha``,
+    ``max_iter``, ``tol`` and ``spill_dir``), ``"join"`` = the row-join
+    engine below, ``"auto"`` (default) = the block engine unless the call
+    needs the join engine — ``checkpoint_dir``, ``resume``, ``run_id``,
+    ``init_state``, ``hub_salts > 1`` or ``hub_isolate`` — or the
+    executors may run on other hosts (a master other than ``local[...]``
+    / ``local-cluster[...]``) and no shared ``spill_dir`` was given, or
+    the vertex table misses an edge endpoint (pregel.choose_engine, the
+    rule all four iterative engines share). The engines agree to ~1e-16
+    relative; ``skew`` and ``hub_top_n`` shape only the join plan.
 
     ``hub_salts > 1`` statically splits the top ``hub_top_n`` out-degree
     hubs' edge blocks across that many salted partitions
@@ -85,6 +100,13 @@ def pagerank(
     start at 1/N; the vector is renormalized to unit mass (the fixed
     point is init-independent, so this only shortens convergence).
     """
+    if choose_engine(
+        g, engine, spill_dir, checkpoint_dir=checkpoint_dir, resume=resume,
+        run_id=run_id, init_state=init_state is not None,
+        hub_salts=hub_salts > 1, hub_isolate=hub_isolate,
+    ) == "block":
+        return pagerank_block(g, alpha=alpha, max_iter=max_iter, tol=tol,
+                              spill_dir=spill_dir)
     spark = g.spark
     n = g.num_vertices
     if n == 0:

@@ -22,7 +22,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import Graph
-from graphscope_spark.pregel import SuperstepRunner, SuperstepResult
+from graphscope_spark.pregel import (
+    SuperstepResult, SuperstepRunner, choose_engine,
+)
 
 
 def sssp(
@@ -36,10 +38,22 @@ def sssp(
     resume: bool = False,
     init_state: DataFrame | None = None,
     skew: str | None = "auto",
+    engine: str = "auto",
+    spill_dir: str | None = None,
 ) -> SuperstepResult:
     """Returns state ``(id, dist, changed)``; ``dist`` is NULL for
     unreachable vertices (the reference prints ∞/max — NULL is our
     relational spelling, filter or fillna at the edge).
+
+    ``engine``: ``"block"`` = :func:`sssp_block` (with ``source``,
+    ``weight_col``, ``max_iter`` and ``spill_dir``), ``"join"`` = the
+    row-join engine below, ``"auto"`` (default) = the block engine unless
+    the call needs the join engine — ``checkpoint_dir``, ``resume``,
+    ``run_id`` or ``init_state`` — or the executors may run on other
+    hosts (a master other than ``local[...]`` / ``local-cluster[...]``)
+    and no shared ``spill_dir`` was given, or the vertex table misses an
+    edge endpoint (pregel.choose_engine). Both engines return identical
+    rows; ``skew`` shapes only the join plan.
 
     ``skew="auto"`` (default): when the measured hub set is non-empty
     (operators/skew.py measured_hub_keys — a source's edge block exceeds
@@ -63,6 +77,12 @@ def sssp(
     previously unreached) regardless of what init_state says, so a
     late-arriving source still triggers a full solve.
     """
+    if choose_engine(
+        g, engine, spill_dir, checkpoint_dir=checkpoint_dir, resume=resume,
+        run_id=run_id, init_state=init_state is not None,
+    ) == "block":
+        return sssp_block(g, source, weight_col=weight_col,
+                          max_iter=max_iter, spill_dir=spill_dir)
     spark = g.spark
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     # undirected Graphs ALWAYS store both directions (graph.py canonicalizes
@@ -164,6 +184,7 @@ def sssp_block(
     weight_col: str | None = None,
     max_iter: int = 10_000,
     num_blocks: int | None = None,
+    spill_dir: str | None = None,
 ) -> SuperstepResult:
     """SSSP over hash-partitioned weighted CSR blocks — identical
     semantics AND bit-identical fixpoint to :func:`sssp` (each relax
@@ -243,7 +264,8 @@ def sssp_block(
         votes=("frontier",), should_stop=lambda t: t["frontier"] == 0,
     )
     return run_block_program(g, prog, g.vertices.select("id"), max_iter,
-                             num_blocks=num_blocks, weight_col=weight_col)
+                             num_blocks=num_blocks, weight_col=weight_col,
+                             spill_dir=spill_dir)
 
 
 def bfs(g: Graph, source: int, **kw) -> SuperstepResult:

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import Graph
+from graphscope_spark.pregel import choose_engine
 
 
 def _undirected_simple_edges(g: Graph) -> DataFrame:
@@ -35,20 +36,25 @@ def _undirected_simple_edges(g: Graph) -> DataFrame:
     return canon
 
 
-def triangles(g: Graph, engine: str = "auto") -> DataFrame:
+def triangles(g: Graph, engine: str = "auto",
+              spill_dir: str | None = None) -> DataFrame:
     """Per-vertex triangle counts: ``(id: long, tri: long)``, one row per
     vertex of ``g`` (0 for triangle-free vertices).
 
     ``engine``: ``"join"`` = the row-shuffle wedge join below; ``"block"``
-    = the packed-CSR intersection kernel (:func:`triangles_block`);
-    ``"auto"`` (default) picks the block kernel once the canonical edge
-    set is large enough for its one-time pack to pay off (the join plan's
-    wedge shuffle is the dominant cost at scale — measured 2.9× at the
-    8M-edge bench probe). Both are exact and return identical counts."""
+    = the packed-CSR intersection kernel (:func:`triangles_block`, with
+    ``spill_dir``); ``"auto"`` (default) picks the block kernel where
+    pregel.choose_engine allows it (the rule of pagerank, wcc, cdlp and
+    sssp: a spill every executor can read, a vertex table holding every
+    edge endpoint) AND the canonical edge set is large enough for its
+    one-time pack to pay off (the join plan's wedge shuffle is the
+    dominant cost at scale — measured 2.9× at the 8M-edge bench probe).
+    Both are exact and return identical counts."""
+    use_block = choose_engine(g, engine, spill_dir) == "block"
     canon = _undirected_simple_edges(g).persist()
-    if engine in ("block", "auto"):
+    if use_block:
         # ONE agg materializes the canon cache and yields everything both
-        # the dispatch and the block kernel need (count, id range) — no
+        # the size rule and the block kernel need (count, id range) — no
         # second Θ(E) pass inside triangles_block
         row = canon.agg(
             F.count(F.lit(1)).alias("m"),
@@ -60,7 +66,8 @@ def triangles(g: Graph, engine: str = "auto") -> DataFrame:
                  int(row["mx"]) if row["mx"] is not None else 0)
         if engine == "block" or stats[0] >= _BLOCK_ENGINE_MIN_EDGES:
             try:
-                return triangles_block(g, canon=canon, canon_stats=stats)
+                return triangles_block(g, spill_dir=spill_dir, canon=canon,
+                                       canon_stats=stats)
             finally:
                 canon.unpersist()
 

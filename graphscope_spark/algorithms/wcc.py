@@ -22,7 +22,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import Graph, materialized_checkpoint
-from graphscope_spark.pregel import SuperstepRunner, SuperstepResult
+from graphscope_spark.pregel import (
+    SuperstepResult, SuperstepRunner, choose_engine,
+)
 
 
 def wcc(
@@ -36,9 +38,21 @@ def wcc(
     hub_top_n: int = 16,
     hub_isolate: bool = False,
     skew: str | None = "auto",
+    engine: str = "auto",
+    spill_dir: str | None = None,
 ) -> SuperstepResult:
     """Returns state ``(id: long, comp: long, changed: boolean)``; ``comp``
     is the min reachable vertex id. Callers typically select(id, comp).
+
+    ``engine``: ``"block"`` = :func:`wcc_block` (with ``max_iter`` and
+    ``spill_dir``), ``"join"`` = the row-join engine below, ``"auto"``
+    (default) = the block engine unless the call needs the join engine —
+    ``checkpoint_dir``, ``resume``, ``run_id``, ``hub_salts > 1`` or
+    ``hub_isolate`` — or the executors may run on other hosts (a master
+    other than ``local[...]`` / ``local-cluster[...]``) and no shared
+    ``spill_dir`` was given, or the vertex table misses an edge endpoint
+    (pregel.choose_engine). Both engines return identical rows;
+    ``skew`` and ``hub_top_n`` shape only the join plan.
 
     ``skew="auto"`` (default): measure the hub set once (operators/skew.py
     measured_hub_keys — one count + top-n agg) and, when any key's edge
@@ -58,6 +72,11 @@ def wcc(
     broadcast-isolate MEASURED hubs instead (HubIsolatedEdges) — kept for
     the bench matrix; the sum-combiner remedy, not the right default
     here."""
+    if choose_engine(
+        g, engine, spill_dir, checkpoint_dir=checkpoint_dir, resume=resume,
+        run_id=run_id, hub_salts=hub_salts > 1, hub_isolate=hub_isolate,
+    ) == "block":
+        return wcc_block(g, max_iter=max_iter, spill_dir=spill_dir)
     spark = g.spark
     # both directions, symmetrized ONCE outside the loop — weak
     # connectivity ignores orientation (wcc_projected.h:92-106 iterates
@@ -169,6 +188,7 @@ def wcc_block(
     g: Graph,
     max_iter: int = 200,
     num_blocks: int | None = None,
+    spill_dir: str | None = None,
 ) -> SuperstepResult:
     """WCC over hash-partitioned CSR blocks — identical semantics (and
     fixpoint) to :func:`wcc`, alternative physical plan on the block
@@ -233,7 +253,8 @@ def wcc_block(
         votes=("frontier",), should_stop=lambda t: t["frontier"] == 0,
     )
     return run_block_program(g, prog, g.vertices.select("id"), max_iter,
-                             num_blocks=num_blocks, direction="both")
+                             num_blocks=num_blocks, direction="both",
+                             spill_dir=spill_dir)
 
 
 def cc_log(g: Graph, max_iter: int = 64) -> DataFrame:

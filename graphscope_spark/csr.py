@@ -682,21 +682,34 @@ def build_csr_blocks_indexed(g: Graph, num_blocks: int | None = None) -> DataFra
 
 _SPILL_BUFS = ("srcs", "indptr", "inv", "uniq", "bounds")
 # (spill_dir, blk, kind, file-token) -> mmap'd ndarray(s). The token is
-# the primary file's (mtime_ns, size) — or None when the file is absent —
-# so REUSING a spill_dir across two runs (or a file appearing after a
-# miss was cached) can never serve a stale mmap or a stale empty-key
-# entry to a long-lived Python worker. Engines using default_spill_dir()
-# get a fresh dir per run and a constant token; the stat is ~1 µs on
-# /dev/shm, amortized over a whole block kernel call.
+# the primary file's (inode, mtime_ns, size) — or None when the file is
+# absent — so REUSING a spill_dir across two runs (or a file appearing
+# after a miss was cached) can never serve a stale mmap or a stale
+# empty-key entry to a long-lived Python worker: every spill write is an
+# atomic rename, i.e. a new inode. Engines using default_spill_dir() get
+# a fresh dir per run and a constant token; the stat is ~1 µs on
+# /dev/shm, amortized over a whole block kernel call. At most one token
+# per (spill_dir, blk, kind) stays cached (_cache_put).
 _CSR_SPILL_CACHE: dict = {}
 
 
 def _spill_token(path: str):
     try:
         st = os.stat(path)
-        return (st.st_mtime_ns, st.st_size)
+        return (st.st_ino, st.st_mtime_ns, st.st_size)
     except OSError:
         return None
+
+
+def _cache_put(key: tuple, value) -> None:
+    """Cache ``value`` under ``(spill_dir, blk, kind, token)``, dropping
+    the entries of the same ``(spill_dir, blk, kind)`` under other
+    tokens: their files were replaced by a later run into the same
+    caller ``spill_dir``, and a cached mmap would pin the replaced
+    file's pages for the life of the worker."""
+    for k in [k for k in _CSR_SPILL_CACHE if k[:3] == key[:3]]:
+        del _CSR_SPILL_CACHE[k]
+    _CSR_SPILL_CACHE[key] = value
 
 
 def _purge_dead_spills() -> None:
@@ -752,7 +765,7 @@ def load_spilled_block(spill_dir: str, blk: int, n_edge: int) -> dict | None:
         wpath = os.path.join(spill_dir, f"blk{int(blk)}_ws.npy")
         if os.path.exists(wpath):
             bufs["ws"] = np.load(wpath, mmap_mode="r")
-        _CSR_SPILL_CACHE[key] = bufs
+        _cache_put(key, bufs)
     return bufs
 
 
@@ -963,7 +976,7 @@ def load_spilled_keys(
                 "executor for the whole run"
             )
         arr = np.load(path, mmap_mode="r")
-        _CSR_SPILL_CACHE[key] = arr
+        _cache_put(key, arr)
     return arr
 
 
@@ -1031,7 +1044,7 @@ def load_spilled_vertices(spill_dir: str, blk: int) -> dict | None:
             )
             for name in _VSPILL_BUFS
         }
-        _CSR_SPILL_CACHE[key] = bufs
+        _cache_put(key, bufs)
     return bufs
 
 

@@ -61,6 +61,17 @@ def materialized_checkpoint(df: DataFrame) -> DataFrame:
     return out
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist a :func:`materialized_checkpoint` result AND free the
+    ``localCheckpoint`` RDD under it. ``unpersist()`` alone drops only
+    the cache on top: the checkpoint's blocks stay persisted for as long
+    as any plan still references them, which a caller holding a later
+    round's DataFrame always does. Call it once nothing needs the
+    checkpoint's rows — every later state that read them is materialized."""
+    df.unpersist()
+    df._jdf.logicalPlan().rdd().unpersist(False)  # the LogicalRDD's RDD
+
+
 def persist_partitioned(df: DataFrame) -> DataFrame:
     """persist() with AQE disabled at cache-registration time.
 
@@ -165,6 +176,9 @@ class Graph:
                 rev
             ).distinct()
 
+        # True when the vertex table is derived from the edges; a
+        # caller's table is checked on first use (vertices_cover_edges)
+        self._covers: bool | None = True if vertices is None else None
         if vertices is None:
             vertices = (
                 edges.select(F.col("src").alias("id"))
@@ -341,6 +355,23 @@ class Graph:
         hubs = sorted(r["id"] for r in rows if r["deg"] > threshold)
         self._hub_cache[ck] = hubs
         return hubs
+
+    @property
+    def vertices_cover_edges(self) -> bool:
+        """Whether every edge endpoint is in the vertex table — cached.
+        True without a job when the vertices were derived from the edges;
+        for a caller's vertex table, one aggregate over the cached
+        ``degrees``: their out- and in-degree sums count the edges whose
+        source and target are vertices, so both equal the edge count
+        exactly when no endpoint is missing (a duplicated vertex id that
+        has edges makes them exceed it, which also reads False)."""
+        if self._covers is None:
+            row = self.degrees.agg(
+                F.coalesce(F.sum("out_deg"), F.lit(0)).alias("o"),
+                F.coalesce(F.sum("in_deg"), F.lit(0)).alias("i"),
+            ).first()
+            self._covers = row["o"] == row["i"] == self.num_edges
+        return self._covers
 
     @property
     def num_vertices(self) -> int:

@@ -12,7 +12,8 @@ reference gets for free from MPI+vineyard that Spark needs explicitly:
 
   * lineage truncation — every round appends to the logical plan, so the
     kernel calls `localCheckpoint(eager=True)` every ``truncate_every``
-    rounds (otherwise plan analysis time grows superlinearly);
+    rounds (otherwise plan analysis time grows superlinearly) and frees
+    each cut's checkpoint RDD once a later state no longer reads it;
   * durable checkpoint/resume (north rule) — every ``checkpoint_every``
     rounds the state DataFrame is written to
     ``{dir}/{run_id}/state/round=K/`` (Parquet; Iceberg when a catalog is
@@ -46,7 +47,9 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark import csr
-from graphscope_spark.graph import Graph, materialized_checkpoint
+from graphscope_spark.graph import (
+    Graph, materialized_checkpoint, release_checkpoint,
+)
 
 
 @dataclass
@@ -184,27 +187,34 @@ class SuperstepRunner:
 
         state = state.persist(StorageLevel.MEMORY_AND_DISK)
         all_metrics: list[dict] = []
+        cut = None  # the latest lineage cut, until the next supersedes it
         rnd = start_round
         for rnd in range(start_round + 1, max_rounds + 1):
             t0 = time.monotonic()
-            new_state = step(state, rnd)
-
-            if rnd % self.truncate_every == 0:
-                # eager lineage cut: materializes and drops the plan prefix.
-                # materialized_checkpoint (not bare localCheckpoint) because
-                # steps that reference `state` more than once (block-engine
-                # frontier+receiver cogroups, pointer-jumping self-joins)
-                # would otherwise square the inherited sizeInBytes estimate
-                # every round — see graph.materialized_checkpoint's docstring.
-                new_state = materialized_checkpoint(new_state)
-            else:
-                new_state = new_state.persist(StorageLevel.MEMORY_AND_DISK)
+            new_state = step(state, rnd).persist(StorageLevel.MEMORY_AND_DISK)
 
             vote_now = (
                 metrics_fn is not None
                 and (rnd % max(check_every, 1) == 0 or rnd == max_rounds)
             )
             metrics = metrics_fn(state, new_state, rnd) if vote_now else {}
+            stop = vote_now and should_stop is not None and should_stop(metrics)
+
+            if rnd % self.truncate_every == 0 and rnd < max_rounds and not stop:
+                # eager lineage cut: materializes and drops the plan prefix.
+                # materialized_checkpoint (not bare localCheckpoint) because
+                # steps that reference `state` more than once (block-engine
+                # frontier+receiver cogroups, pointer-jumping self-joins)
+                # would otherwise square the inherited sizeInBytes estimate
+                # every round — see graph.materialized_checkpoint's docstring.
+                # The final round is never cut: the result stays a plain
+                # persisted DataFrame that the caller's unpersist() frees.
+                ckpt = materialized_checkpoint(new_state)
+                new_state.unpersist()
+                new_state = ckpt
+                if cut is not None:  # nothing reads the previous cut now
+                    release_checkpoint(cut)
+                cut = ckpt
             wall_ms = (time.monotonic() - t0) * 1000.0
             metrics = {"superstep": rnd, "wall_ms": wall_ms, **metrics}
             all_metrics.append(metrics)
@@ -216,8 +226,12 @@ class SuperstepRunner:
 
             state.unpersist()
             state = new_state
-            if vote_now and should_stop is not None and should_stop(metrics):
+            if stop:
                 break
+        if cut is not None:
+            # the result reads the last cut until it is materialized
+            state.count()
+            release_checkpoint(cut)
         return SuperstepResult(state=state, rounds=rnd, metrics=all_metrics,
                                run_id=self.run_id)
 
@@ -527,3 +541,51 @@ def run_block_program(
         if spill_dir is None:
             csr.cleanup_spill(sd)
     return SuperstepResult(state=state, rounds=rnd, metrics=metrics)
+
+
+# ------------------------------------------------------------------ #
+# The engine rule — row joins or the block skeleton
+# ------------------------------------------------------------------ #
+
+ENGINES = ("auto", "join", "block")
+
+
+def spill_visible(master: str, spill_dir: str | None) -> bool:
+    """Whether every executor can read a block run's spill: always with
+    a caller ``spill_dir`` (the caller's promise that it is shared), and
+    with the default node-local dir (csr.default_spill_dir, /dev/shm)
+    only when the executors run on the driver's host — a ``local`` or
+    ``local-cluster`` master."""
+    return spill_dir is not None or master == "local" or master.startswith(
+        ("local[", "local-cluster["))
+
+
+def choose_engine(g: Graph, engine: str, spill_dir: str | None = None,
+                  **join_only) -> str:
+    """The one engine rule of ``pagerank``, ``wcc``, ``cdlp``, ``sssp``
+    and ``triangles``: returns ``"join"`` or ``"block"``.
+
+    ``join_only`` names each argument that only the row-join engine
+    implements (checkpoint/resume, warm starts, hub salting or
+    isolation), mapped to whether this call uses it. ``engine="auto"``
+    takes the block skeleton unless the call uses one of them, the spill
+    is not visible to every executor (:func:`spill_visible`), or the
+    vertex table misses an edge endpoint
+    (:attr:`Graph.vertices_cover_edges`; the join engines drop such
+    edges' messages, the block skeleton raises). There is no size
+    threshold: the block skeleton won at every measured size, from 2k
+    to 1M edges (ROADMAP item 6, "Engine crossover"). ``engine="block"``
+    with a join-only argument raises ValueError."""
+    if engine not in ENGINES:
+        raise ValueError(f"engine must be one of {ENGINES}, not {engine!r}")
+    used = sorted(k for k, v in join_only.items() if v)
+    if engine == "block" and used:
+        raise ValueError(
+            f"engine='block' does not implement {', '.join(used)}; "
+            "use engine='join' or 'auto'")
+    if engine != "auto":
+        return engine
+    block = (not used
+             and spill_visible(g.spark.sparkContext.master, spill_dir)
+             and g.vertices_cover_edges)
+    return "block" if block else "join"

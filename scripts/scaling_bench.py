@@ -88,19 +88,21 @@ if job == "block":
     res = pagerank_block(g, alpha=0.85, max_iter=rounds,
                          num_blocks={blocks})
 elif job == "auto":
-    # the NO-FLAGS default path, sensor included in the timed region.
+    # the join engine's default skew path (skew="auto"), sensor included
+    # in the timed region.
     # Round 5 made the sensor a cached top-n over the already-persisted
     # degrees table (Graph.measured_hubs) instead of a per-call count +
     # top-n over the edge table — the ~5% efficiency drag the r4 runs
     # measured at N=2 (0.810 auto vs 0.849 plan-pinned) was that
     # re-aggregation.
-    res = pagerank(g, alpha=0.85, max_iter=rounds)
+    res = pagerank(g, alpha=0.85, max_iter=rounds, engine="join")
 else:
     # skew=None pins the PLAIN join plan: the criterion row must stay
     # the same measured job across rounds (the auto sensor would
     # otherwise add its jobs to the timed region — measured separately
     # by --job auto)
-    res = pagerank(g, alpha=0.85, max_iter=rounds, skew=None)
+    res = pagerank(g, alpha=0.85, max_iter=rounds, skew=None,
+                   engine="join")
 # JVM-side noop sink: materializes every row without Python serialization
 res.state.write.format("noop").mode("overwrite").save()
 wall = time.monotonic() - t0

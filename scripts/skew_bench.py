@@ -85,15 +85,16 @@ before = stages()
 seen = {{s["stageId"] for s in before}}
 t0 = time.monotonic()
 mode = "{mode}"
+# every leg is the row-join engine, whose plans the skew remedies shape
 if mode == "isolate":
-    kw = dict(hub_isolate=True, skew=None)
+    kw = dict(hub_isolate=True, skew=None, engine="join")
 elif mode == "auto":
-    kw = dict(skew="auto")  # the no-flags default: measured-skew policy
+    kw = dict(skew="auto", engine="join")  # the measured-skew policy
 else:
     # salts=0 is the PLAIN leg — pin skew=None so the auto policy
     # (now the default) doesn't silently turn the plain leg into a
     # remedied one
-    kw = dict(hub_salts={salts}, skew=None)
+    kw = dict(hub_salts={salts}, skew=None, engine="join")
 if "{algo}" == "pagerank":
     res = pagerank(g, alpha=0.85, max_iter=rounds, **kw)
 else:

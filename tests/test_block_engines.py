@@ -40,7 +40,7 @@ def test_wcc_block_matches_oracle(g, graph_data):
 
 
 def test_wcc_block_matches_join_engine(g):
-    a = _as_dict(wcc(g).state, "id", "comp")
+    a = _as_dict(wcc(g, engine="join").state, "id", "comp")
     b = _as_dict(wcc_block(g).state, "id", "comp")
     assert a == b
 
@@ -59,7 +59,7 @@ def test_cdlp_block_matches_oracle(g, graph_data):
 
 
 def test_cdlp_block_matches_join_engine(g):
-    a = _as_dict(cdlp(g, max_iter=7).state, "id", "label")
+    a = _as_dict(cdlp(g, max_iter=7, engine="join").state, "id", "label")
     b = _as_dict(cdlp_block(g, max_iter=7).state, "id", "label")
     assert a == b
 
@@ -71,9 +71,10 @@ def test_block_engines_undirected_convention(spark):
     both = edges + [(b, a) for a, b in edges]
     e = spark.createDataFrame(both, "src long, dst long")
     g = Graph(e, directed=False, num_partitions=4)
-    assert (_as_dict(wcc(g).state, "id", "comp")
+    assert (_as_dict(wcc(g, engine="join").state, "id", "comp")
             == _as_dict(wcc_block(g).state, "id", "comp"))
-    assert (_as_dict(cdlp(g, max_iter=6).state, "id", "label")
+    assert (_as_dict(cdlp(g, max_iter=6, engine="join").state,
+                     "id", "label")
             == _as_dict(cdlp_block(g, max_iter=6).state, "id", "label"))
 
 
@@ -163,7 +164,8 @@ def test_sssp_block_matches_oracle(gw, graph_data):
 def test_sssp_block_bit_identical_to_join_engine(gw, graph_data):
     vertices, _ = graph_data
     src = min(vertices)
-    a = _as_dict(sssp(gw, src, weight_col="w").state, "id", "dist")
+    a = _as_dict(sssp(gw, src, weight_col="w", engine="join").state,
+                 "id", "dist")
     b = _as_dict(sssp_block(gw, src, weight_col="w").state, "id", "dist")
     assert a == b  # exact ==, incl. None for unreachable — no tolerance
 
@@ -172,7 +174,7 @@ def test_sssp_block_unit_weights_are_bfs_levels(g, graph_data):
     vertices, _ = graph_data
     src = min(vertices)
     from graphscope_spark.algorithms import bfs
-    a = _as_dict(bfs(g, src).state, "id", "dist")
+    a = _as_dict(bfs(g, src, engine="join").state, "id", "dist")
     b = _as_dict(sssp_block(g, src).state, "id", "dist")
     assert a == b
 

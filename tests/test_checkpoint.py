@@ -28,7 +28,7 @@ def _ranks(res):
 def test_pagerank_resume_bit_identical(g, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     # uninterrupted 10 rounds
-    full = pagerank(g, alpha=0.85, max_iter=10)
+    full = pagerank(g, alpha=0.85, max_iter=10, engine="join")
     # interrupted: 6 rounds with durable checkpoints every 3
     part = pagerank(g, alpha=0.85, max_iter=6, checkpoint_dir=ckpt,
                     checkpoint_every=3, run_id="resume-test")
@@ -65,7 +65,7 @@ def test_lineage_records(g, tmp_path, spark):
 
 def test_wcc_resume(g, tmp_path):
     ckpt = str(tmp_path / "ckpt3")
-    full = wcc(g)
+    full = wcc(g, engine="join")
     part = wcc(g, max_iter=3, checkpoint_dir=ckpt, checkpoint_every=3,
                run_id="wcc-resume")
     resumed = wcc(g, checkpoint_dir=ckpt, checkpoint_every=5,

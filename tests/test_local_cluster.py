@@ -149,7 +149,7 @@ BODY_ENGINES = r"""
 from graphscope_spark.algorithms import pagerank, pagerank_block, wcc, wcc_block
 from graphscope_spark.algorithms.triangles import triangle_count
 
-pr_join = pagerank(g, alpha=0.85, max_iter=5, skew=None).state
+pr_join = pagerank(g, alpha=0.85, max_iter=5, skew=None, engine="join").state
 pr_blk = pagerank_block(g, alpha=0.85, max_iter=5, num_blocks=8).state
 diff = (
     pr_join.select("id", F.col("rank").alias("r1"))
@@ -161,13 +161,17 @@ diff = (
 out["pagerank_maxdiff"] = float(diff)
 
 gu = g.to_undirected()
-w_join = wcc(gu, skew=None).state.select("id", "comp")
+w_join = wcc(gu, skew=None, engine="join").state.select("id", "comp")
 w_blk = wcc_block(gu, num_blocks=8).state.select("id", "comp")
 out["wcc_mismatch"] = w_join.join(w_blk.withColumnRenamed("comp", "c2"), "id") \
     .filter("comp <> c2").count()
 
 out["tri_block"] = triangle_count(gu, engine="block")
 out["tri_join"] = triangle_count(gu, engine="join")
+
+# executors on the driver's host read the default /dev/shm spill
+from graphscope_spark.pregel import choose_engine
+out["auto_engine"] = choose_engine(g, "auto")
 """
 
 BODY_SKEW = r"""
@@ -188,8 +192,8 @@ edges_skew = base.select(
 gs = Graph(edges_skew, directed=True, num_partitions=8)
 hubs = gs.measured_hubs("sym")
 out["hubs_measured"] = len(hubs)
-w_auto = wcc(gs).state.select("id", "comp")
-w_plain = wcc(gs, skew=None).state.select("id", "comp")
+w_auto = wcc(gs, engine="join").state.select("id", "comp")
+w_plain = wcc(gs, skew=None, engine="join").state.select("id", "comp")
 out["wcc_auto_mismatch"] = w_auto.join(
     w_plain.withColumnRenamed("comp", "c2"), "id"
 ).filter("comp <> c2").count()
@@ -230,6 +234,7 @@ def test_block_engines_match_join_engines_across_jvms():
     assert out["pagerank_maxdiff"] < 1e-12, out
     assert out["wcc_mismatch"] == 0, out
     assert out["tri_block"] == out["tri_join"], out
+    assert out["auto_engine"] == "block", out
 
 
 @pytest.mark.full

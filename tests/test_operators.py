@@ -257,7 +257,7 @@ def test_hub_salted_algorithms_parity(spark):
     gg = Graph(spark.createDataFrame(rows, "src long, dst long"),
                directed=True, num_partitions=8)
     plain_pr = {r["id"]: r["rank"]
-                for r in pagerank(gg, max_iter=5).state.collect()}
+                for r in pagerank(gg, max_iter=5, engine="join").state.collect()}
     salt_pr = {r["id"]: r["rank"]
                for r in pagerank(gg, max_iter=5, hub_salts=4,
                                  hub_top_n=2).state.collect()}
@@ -265,7 +265,7 @@ def test_hub_salted_algorithms_parity(spark):
     for k in plain_pr:
         assert math.isclose(plain_pr[k], salt_pr[k], rel_tol=1e-12)
     plain_cc = sorted((r["id"], r["comp"])
-                      for r in wcc(gg).state.collect())
+                      for r in wcc(gg, engine="join").state.collect())
     salt_cc = sorted((r["id"], r["comp"])
                      for r in wcc(gg, hub_salts=4, hub_top_n=2).state.collect())
     assert plain_cc == salt_cc
@@ -318,14 +318,14 @@ def test_hub_isolated_algorithms_parity(spark):
     gg = Graph(spark.createDataFrame(rows, "src long, dst long"),
                directed=True, num_partitions=4)
     plain_pr = {r["id"]: r["rank"]
-                for r in pagerank(gg, max_iter=5).state.collect()}
+                for r in pagerank(gg, max_iter=5, engine="join").state.collect()}
     iso_pr = {r["id"]: r["rank"]
               for r in pagerank(gg, max_iter=5, hub_isolate=True,
                                 hub_top_n=2).state.collect()}
     assert plain_pr.keys() == iso_pr.keys()
     for k in plain_pr:
         assert math.isclose(plain_pr[k], iso_pr[k], rel_tol=1e-12)
-    plain_cc = sorted((r["id"], r["comp"]) for r in wcc(gg).state.collect())
+    plain_cc = sorted((r["id"], r["comp"]) for r in wcc(gg, engine="join").state.collect())
     iso_cc = sorted((r["id"], r["comp"])
                     for r in wcc(gg, hub_isolate=True,
                                  hub_top_n=2).state.collect())

@@ -46,7 +46,7 @@ def test_block_matches_numpy_oracle(g, graph_data):
 def test_block_matches_join_engine_exactly(g):
     # same graph, both engines, tight tolerance: the block path is an
     # alternative PHYSICAL plan for the identical update rule
-    a = _as_dict(pagerank(g, alpha=0.85, max_iter=7).state)
+    a = _as_dict(pagerank(g, alpha=0.85, max_iter=7, engine="join").state)
     b = _as_dict(pagerank_block(g, alpha=0.85, max_iter=7).state)
     ids = sorted(a)
     assert np.allclose([a[i] for i in ids], [b[i] for i in ids],

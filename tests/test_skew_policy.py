@@ -59,10 +59,10 @@ def test_wcc_auto_bit_identical(spark):
     g = _skewed_graph(spark)
     plain = sorted(
         (r["id"], r["comp"])
-        for r in wcc(g, skew=None).state.select("id", "comp").collect())
+        for r in wcc(g, skew=None, engine="join").state.select("id", "comp").collect())
     auto = sorted(
         (r["id"], r["comp"])
-        for r in wcc(g).state.select("id", "comp").collect())
+        for r in wcc(g, engine="join").state.select("id", "comp").collect())
     assert plain == auto  # min-combine: salting is bit-identical
 
 
@@ -71,10 +71,10 @@ def test_sssp_auto_bit_identical(spark):
     plain = sorted(
         (r["id"], r["dist"])
         for r in sssp(g, source=0, weight_col="w",
-                      skew=None).state.select("id", "dist").collect())
+                      skew=None, engine="join").state.select("id", "dist").collect())
     auto = sorted(
         (r["id"], r["dist"])
-        for r in sssp(g, source=0, weight_col="w")
+        for r in sssp(g, source=0, weight_col="w", engine="join")
         .state.select("id", "dist").collect())
     assert plain == auto  # float min is order-free: bit-identical
 
@@ -83,11 +83,11 @@ def test_cdlp_auto_bit_identical(spark):
     g = _skewed_graph(spark)
     plain = sorted(
         (r["id"], r["label"])
-        for r in cdlp(g, max_iter=5, skew=None)
+        for r in cdlp(g, max_iter=5, skew=None, engine="join")
         .state.select("id", "label").collect())
     auto = sorted(
         (r["id"], r["label"])
-        for r in cdlp(g, max_iter=5).state.select("id", "label").collect())
+        for r in cdlp(g, max_iter=5, engine="join").state.select("id", "label").collect())
     assert plain == auto  # integer count + deterministic tie-break
 
 
@@ -95,11 +95,11 @@ def test_pagerank_auto_allclose(spark):
     g = _skewed_graph(spark)
     plain = dict(
         (r["id"], r["rank"])
-        for r in pagerank(g, max_iter=5, skew=None)
+        for r in pagerank(g, max_iter=5, skew=None, engine="join")
         .state.select("id", "rank").collect())
     auto = dict(
         (r["id"], r["rank"])
-        for r in pagerank(g, max_iter=5).state.select("id", "rank").collect())
+        for r in pagerank(g, max_iter=5, engine="join").state.select("id", "rank").collect())
     assert plain.keys() == auto.keys()
     # sum order may differ at the ulp level (isolate splits the hub's
     # partial sums off the keyed join) — the same tolerance class as the
@@ -114,8 +114,8 @@ def test_uniform_input_stays_plain(spark):
     g = _uniform_graph(spark)
     plain = sorted(
         (r["id"], r["comp"])
-        for r in wcc(g, skew=None).state.select("id", "comp").collect())
+        for r in wcc(g, skew=None, engine="join").state.select("id", "comp").collect())
     auto = sorted(
         (r["id"], r["comp"])
-        for r in wcc(g).state.select("id", "comp").collect())
+        for r in wcc(g, engine="join").state.select("id", "comp").collect())
     assert plain == auto
